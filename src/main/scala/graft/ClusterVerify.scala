@@ -92,14 +92,10 @@ object ClusterVerify {
       .foreach(_.sparkContext.stop())
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
-    val spark = build(SparkSession.builder()
+    val spark = GraftSession.start(build(GraftSession.builder()
       .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")))
     spark.sparkContext.setLogLevel("WARN")
-    GraftSession.registerFunctions(spark)
     try body(spark)
     finally {
       spark.stop()

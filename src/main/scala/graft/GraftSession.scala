@@ -12,9 +12,12 @@ import graft.functions.{PolyHash, VectorDot, WinnowKeys, WordShingles}
   * SparkSessionExtensions injection point), so `spark.sql("SELECT
   * poly_hash(text) ...")` works in any session of the cluster.
   *
-  * `GraftSession.builder` is the local/default path: engine-tuned conf
+  * `GraftSession.build` is the local/default path: engine-tuned conf
   * (AQE on, UTC, right-sized shuffle partitions, nanos-timestamp
-  * acceptance) + the same function registrations applied post-build.
+  * acceptance, a codegen cache sized to the engine's working set) + the
+  * same function registrations applied post-build. The harness mains
+  * start from `GraftSession.builder` and add their own master and
+  * partitioning.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
@@ -52,23 +55,44 @@ object GraftSession {
         exprs(2).eval().asInstanceOf[Int]))
   }
 
+  /** Entries in Spark's JVM-wide cache of compiled generated classes
+    * (`spark.sql.codegen.cache.maxEntries`, default 100). The engine's
+    * working set is far larger: one cold round of the 204 non-const
+    * `SparkEntry.queries` at sf0.01 compiled 3,092 distinct classes with
+    * an unbounded cache, and `dedup_keep_representatives` alone needs
+    * more than 100, so at the default every repeated query compiles its
+    * plans again. A static conf: the first session that generates code
+    * fixes the size for the whole JVM.
+    */
+  val CodegenCacheEntries: Int = 4096
+
+  /** The conf every graft session carries, whatever its master and
+    * partitioning: the codegen cache size, UTC, no UI. Callers add
+    * their own master and shuffle settings, then `start` it.
+    */
+  def builder(): SparkSession.Builder = SparkSession.builder()
+    .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
+    .config("spark.sql.session.timeZone", "UTC")
+    .config("spark.ui.enabled", "false")
+
+  /** Gets or creates the session and registers the engine's SQL functions. */
+  def start(b: SparkSession.Builder): SparkSession = {
+    val spark = b.getOrCreate()
+    registerFunctions(spark)
+    spark
+  }
+
   /** Engine-tuned local session. `cores` should match the box in
     * local mode; shuffle partitions follow it (not the 200 default —
     * SURVEY.md perf rules).
     */
-  def build(master: String, cores: Int, appName: String = "graft"): SparkSession = {
-    val spark = SparkSession.builder()
+  def build(master: String, cores: Int, appName: String = "graft"): SparkSession =
+    start(builder()
       .master(master)
       .appName(appName)
       .config("spark.sql.shuffle.partitions", cores.toString)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
         (cores * 4).toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    registerFunctions(spark)
-    spark
-  }
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true"))
 }

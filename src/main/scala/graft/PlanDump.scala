@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan inspector: print a gate query's optimized + formatted physical
   * plan without executing it (generator-input vs project siting, scan
   * pushdown, join strategy — the SURVEY perf-rule checklist).
@@ -13,14 +11,10 @@ object PlanDump {
     val sfDir = args(0)
     val names = args(1).split(',').map(_.trim).toSeq
     val mode = if (args.length > 2) args(2) else "--formatted"
-    val spark = SparkSession.builder()
+    val spark = GraftSession.start(GraftSession.builder()
       .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+      .config("spark.sql.shuffle.partitions", "4"))
     spark.sparkContext.setLogLevel("ERROR")
-    GraftSession.registerFunctions(spark)
     names.foreach { name =>
       println(s"===== $name =====")
       val df = SparkEntry.queries(name)(spark, sfDir)

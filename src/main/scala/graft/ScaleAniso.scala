@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Measures the embed_anisotropy two-level swap threshold (VERDICT
@@ -33,12 +33,10 @@ object ScaleAniso {
     val ds = (if (args.length > 1) args(1) else "256,512,1024")
       .split(",").map(_.trim.toInt).toSeq
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "2").toInt
-    val spark = SparkSession.builder()
+    val spark = GraftSession.builder()
       .master("local[32]")
       .config("spark.sql.shuffle.partitions", "32")
       .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 

@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Scale curve for the Arrow/mapInPandas path (VERDICT r13 #4) — the
   * one gate family [[ScaleCurves]] could not cover because its wall
   * time is dominated by a data-INDEPENDENT spark-submit driver-JVM
@@ -36,11 +34,9 @@ object ScaleArrow {
     require(graft.dynamic.PySparkPrograms.pandasAvailable,
       "no pandas/pyarrow/numpy in the subprocess python")
 
-    val spark = SparkSession.builder()
+    val spark = GraftSession.builder()
       .master("local[32]")
       .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 

@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Vocabulary-regime scale measurement for the containment pair
   * (VERDICT r15 #2): the classic inverted-index form vs the Bayardo
   * prefix-filtered 100 TB path, WALL TIME and DOCUMENTED COST DRIVER
@@ -49,13 +47,11 @@ object ScaleContain {
           }
         }
 
-    val spark = SparkSession.builder()
+    val spark = GraftSession.builder()
       .master("local[32]")
       .config("spark.sql.shuffle.partitions", "32")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", "128")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val sessionConf = SessionConf.applyEnv(spark)

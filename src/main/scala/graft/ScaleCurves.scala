@@ -83,13 +83,11 @@ object ScaleCurves {
     val ms = (if (args.length > 3) args(3) else "1,3,10")
       .split(",").map(_.trim.toLong).sorted.toSeq
 
-    val spark = SparkSession.builder()
+    val spark = GraftSession.builder()
       .master("local[32]")
       .config("spark.sql.shuffle.partitions", "32")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", "128")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Captured for the artifact: a curve measured under a conf

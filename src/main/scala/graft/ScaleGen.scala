@@ -295,11 +295,9 @@ object ScaleGen {
     val ms = args(1).split(",").map(_.trim.toLong)
     val tables: Set[String] =
       if (args.length > 2) args(2).split(",").map(_.trim).toSet else Set.empty
-    val spark = SparkSession.builder()
+    val spark = GraftSession.builder()
       .master("local[32]")
       .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     ms.foreach(m => generate(spark, outBase, m, tables))

@@ -78,12 +78,10 @@ object ScaleStream {
     val only: Option[Set[String]] =
       if (args.length > 1) Some(args(1).split(',').map(_.trim).toSet) else None
     val provider = sys.env.getOrElse("SPARK_GRAFT_STATE_PROVIDER", "hdfs")
-    val spark = SparkSession.builder()
+    val spark = GraftSession.builder()
       .master("local[8]")
       .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 

@@ -31,6 +31,12 @@ object Graph {
     * map-side partial sums — the classic distributed PR layout that
     * holds at web-graph scale. Ranks/degrees are node-table-sized,
     * never collected to the driver.
+    *
+    * Not lazy: building the DataFrame runs two jobs, the eager
+    * `localCheckpoint(true)` of the degree-annotated edge list and
+    * `nodes.count()` for N, plus one eager rank checkpoint per five
+    * supersteps when `iters` exceeds five. Only the final superstep
+    * chain runs when the result is consumed.
     */
   def pageRank(edges: DataFrame, iters: Int, dampingPct: Int = 85): DataFrame = {
     val S = 1000000000L // total rank mass in nano-units

@@ -50,7 +50,7 @@ class ClusterDynamicSpec extends AnyFunSuite with BeforeAndAfterAll {
       .foreach(_.sparkContext.stop())
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
-    spark = SparkSession.builder()
+    spark = GraftSession.start(GraftSession.builder()
       .master("local-cluster[2,1,1024]")
       .appName("graft-cluster-dynamic")
       // the application classpath executors start from — graft +
@@ -66,11 +66,7 @@ class ClusterDynamicSpec extends AnyFunSuite with BeforeAndAfterAll {
       // second executor
       .config("spark.scheduler.minRegisteredResourcesRatio", "1.0")
       .config("spark.scheduler.maxRegisteredResourcesWaitingTime", "90s")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    GraftSession.registerFunctions(spark)
+      .config("spark.sql.shuffle.partitions", "4"))
   }
 
   override def afterAll(): Unit = {

@@ -19,11 +19,9 @@ class SegmentSourceSpec extends SparkSpec {
 
   // StreamingSpec's artifact-free isolated session, same rationale
   override lazy val spark: org.apache.spark.sql.SparkSession =
-    org.apache.spark.sql.SparkSession.builder()
+    GraftSession.builder()
       .master("local[4]")
       .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .getOrCreate().newSession()
 
   private def write(path: java.nio.file.Path, s: String): Unit =

@@ -16,11 +16,9 @@ class StreamingSpec extends SparkSpec {
   // dynamic jars, so an artifact-free session removes the fetch
   // entirely instead of retrying around the race.
   override lazy val spark: org.apache.spark.sql.SparkSession =
-    org.apache.spark.sql.SparkSession.builder()
+    GraftSession.builder()
       .master("local[4]")
       .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .getOrCreate().newSession()
 
   /** events replayed as a file stream (FIXTURES.md §B streaming

@@ -49,11 +49,9 @@ class WriteRetrySpec extends AnyFunSuite with BeforeAndAfterAll {
       .foreach(_.sparkContext.stop())
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
-    val s = SparkSession.builder()
+    val s = GraftSession.builder()
       .master("local[4,2]")
       .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
