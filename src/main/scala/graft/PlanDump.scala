@@ -3,8 +3,11 @@ package graft
 /** Plan inspector: print a gate query's optimized + formatted physical
   * plan without executing it (generator-input vs project siting, scan
   * pushdown, join strategy — the SURVEY perf-rule checklist).
+  * `--final` runs the query (collect) first and prints the formatted
+  * final adaptive plan beside the initial one, so AQE's runtime
+  * choices (broadcast conversion, coalesced widths) are visible.
   *
-  * Usage: PlanDump <sfDir> <name>[,<name>…] [--optimized|--formatted]
+  * Usage: PlanDump <sfDir> <name>[,<name>…] [--optimized|--formatted|--final]
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
@@ -20,6 +23,9 @@ object PlanDump {
       val df = SparkEntry.queries(name)(spark, sfDir)
       mode match {
         case "--optimized" => println(df.queryExecution.optimizedPlan.treeString)
+        case "--final" =>
+          df.collect()
+          df.explain("formatted")
         case _ => df.explain("formatted")
       }
     }

@@ -107,14 +107,16 @@ object SpillVerify {
 
   /** Gates whose plan deliberately contains a NON-spillable buffer,
     * with (documented-error substring, the scale lever that shrinks
-    * the buffer below memory). triangle_count's closing join hashes
-    * the m-row oriented-edge side and streams the O(m^1.5) wedges
-    * (Graph.scala — sort-merging the wedge stream is the plan that
-    * does NOT survive power-law scale), and Spark's hash-relation
-    * build cannot spill by design: under pressure it must fail LOUDLY
-    * with this error, and the mitigation is partition sizing — BOTH
-    * knobs, because they interact: the build side per partition is
-    * m/P rows so the initial partition count must rise, AND AQE's
+    * the buffer below memory). triangle_count's closing join builds a
+    * hash relation on the m-row oriented-edge side and streams the
+    * O(m^1.5) wedges (Graph.scala — sort-merging the wedge stream is
+    * the plan that does NOT survive power-law scale): broadcast when
+    * the side fits the broadcast threshold (sf0.01 and below),
+    * shuffled hash otherwise (this sweep's sf0.1). Spark's shuffled
+    * hash-relation build cannot spill by design: under pressure it
+    * must fail LOUDLY with this error, and the mitigation is partition
+    * sizing — BOTH knobs, because they interact: the build side per
+    * partition is m/P rows so the initial partition count must rise, AND AQE's
     * coalescer must be told the memory-fit target (its 64 MB default
     * advisory size merges the small-SF shuffle right back into
     * partitions whose hash map needs several× the per-task budget —

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.bridge
 
 /** Graph analytics as iterative joins — the idiomatic Spark shape for
   * Pregel-style computation (each superstep = join ranks to edges on
@@ -113,7 +114,15 @@ object Graph {
     * the plan that survives power-law hubs, where the naive
     * id-oriented join blows up on the highest-id hub. Each triangle
     * materializes exactly once (at its minimum-(degree,id) corner).
-    * Three shuffles total: degree agg, wedge self-join, closing join.
+    *
+    * Closing join: broadcast when it fits, shuffled hash otherwise. The
+    * m-row oriented edge list is the build side; the planner broadcasts
+    * it when its runtime size is under the broadcast threshold (then
+    * wedge enumeration, probe and partial count fuse into one stage and
+    * the wedge stream is never shuffled), else hashes it per partition
+    * against the shuffled wedge stream. It never sort-merges by default:
+    * sorting the O(m^1.5) wedge stream is the most expensive step of
+    * the plan (`graft.triangle.sortMerge=true` opts into it, below).
     */
   def triangleCounts(edges: DataFrame): DataFrame = {
     val e = edges.select(col("u"), col("v"))
@@ -124,15 +133,9 @@ object Graph {
       .join(deg.select(col("n").as("v"), col("d").as("dv")), "v")
     val uFirst = col("du") < col("dv") ||
       (col("du") === col("dv") && col("u") < col("v"))
-    // Explicit-width repartition on the wedge-join key (r16, guide
-    // §2.5): the oriented edge list is a few MB, so AQE's
-    // parallelism-first floor coalesces its exchange to a handful of
-    // partitions — but the wedge self-join it feeds multiplies rows
-    // ~100× (O(m^1.5) wedge stream), serializing the dominant stage.
-    // Pinning to the session's shuffle width replaces the
-    // ENSURE_REQUIREMENTS exchange (same shuffle, pinned count), so
-    // nothing extra moves at any scale; at 100 TB the exchange is big
-    // enough that AQE would keep it wide anyway.
+    // No explicit repartition: the wedge self-join on `src` takes the
+    // strategy and exchange widths AQE picks from runtime sizes
+    // (broadcast at sf0.01, SortMergeJoin at sf0.1; plans/).
     val oriented = withDeg.select(
       when(uFirst, col("u")).otherwise(col("v")).as("src"),
       when(uFirst, col("v")).otherwise(col("u")).as("dst"),
@@ -144,16 +147,15 @@ object Graph {
           (col("e1.ddst") < col("e2.ddst") ||
             (col("e1.ddst") === col("e2.ddst") && col("e1.dst") < col("e2.dst"))))
       .select(col("e1.src").as("c"), col("e1.dst").as("x"), col("e2.dst").as("y"))
-    // closing join: wedge volume is O(m^1.5) rows vs m edges — hash
-    // the small edge side instead of sort-merging the wedge stream
-    // (sorting the wedges is the single most expensive step otherwise).
-    // The hash build is the inventory's one non-spillable buffer: if
-    // edges-per-partition outgrow executor memory it fails LOUDLY
-    // (mitigation: more shuffle partitions + a smaller AQE advisory
-    // size — measured to hash-match, BASELINE.md). Conf
-    // `graft.triangle.sortMerge=true` (VERDICT r13 #7) converts that
-    // sizing rule into a choice: a fully spill-safe sort-merge closing
-    // join, identical results, at the cost of sorting the wedge stream.
+    // closing join: PREFER_SHUFFLE_HASH rather than no hint, which would
+    // fall back to SortMergeJoin once the edge list outgrows the
+    // broadcast threshold. The shuffled hash build is the inventory's
+    // one non-spillable buffer: if edges-per-partition outgrow executor
+    // memory it fails LOUDLY (mitigation: more shuffle partitions + a
+    // smaller AQE advisory size — measured to hash-match, BASELINE.md).
+    // Conf `graft.triangle.sortMerge=true` converts that sizing rule
+    // into a choice: a fully spill-safe sort-merge closing join,
+    // identical results, at the cost of sorting the wedge stream.
     val closing = oriented.select(col("src").as("x"), col("dst").as("y"))
     val sortMerge = edges.sparkSession.conf
       .get("graft.triangle.sortMerge", "false").trim.toLowerCase match {
@@ -163,7 +165,7 @@ object Graph {
           s"graft.triangle.sortMerge must be true|false, got '$other'")
       }
     wedges.join(
-        if (sortMerge) closing.hint("merge") else closing.hint("shuffle_hash"),
+        if (sortMerge) closing.hint("merge") else bridge.preferShuffleHash(closing),
         Seq("x", "y"))
       .select(explode(array(col("c"), col("x"), col("y"))).as("node"))
       .groupBy("node").agg(count(lit(1)).as("n_tri"))

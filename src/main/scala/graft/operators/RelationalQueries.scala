@@ -1453,13 +1453,9 @@ object RelationalQueries {
     // an order). Engine: degree-oriented wedge join, O(m^1.5) bound;
     // oracle: direct id-ordered 3-way join — same triangle set -------
     QDef("triangle_count", (s, dir) => {
-      // explicit-width repartitions ahead of the two distincts (r16,
-      // guide §2.5): the single-row-group parquet scan gives this
-      // chain 1-3 tasks, so the dedup hash-aggs and the co-purchase
-      // self-join ran nearly serial; pinning to the session shuffle
-      // width replaces each ENSURE_REQUIREMENTS exchange (same
-      // shuffle, pinned count) and moves the agg work to a full-width
-      // stage. No-op at scale, where the scan is already parallel.
+      // co-purchase edges: two distincts around an order-key self-join.
+      // No explicit repartition: each distinct and the self-join shuffle
+      // through their own ENSURE_REQUIREMENTS exchange, sized by AQE.
       val li = t(s, dir, "lineitem")
         .select(col("l_orderkey").as("ok"), col("l_partkey").as("p"))
         .distinct()

@@ -60,30 +60,66 @@ class RelationalSpec extends SparkSpec {
     assert(got.values.sum == 12L)
   }
 
-  test("triangleCounts: graft.triangle.sortMerge swaps the closing join to a " +
-      "spill-safe SortMergeJoin with identical results (VERDICT r13 #7)") {
+  test("triangleCounts: the closing join broadcasts when it fits, shuffle-hashes " +
+      "when it does not, sort-merges only under graft.triangle.sortMerge; rows identical") {
     import spark.implicits._
-    // a denser random-ish graph than K4 so the A/B is non-trivial:
-    // deterministic pseudo-edges over 60 nodes
-    val edges = (0 until 600).map { i =>
-      val a = (i * 37 + 11) % 60; val b = (i * 53 + 29) % 60
-      (math.min(a, b).toLong, math.max(a, b).toLong)
-    }.filter { case (u, v) => u != v }.distinct.toDF("u", "v")
-    def run() = graft.operators.Graph.triangleCounts(edges)
-    def closingJoins(df: org.apache.spark.sql.DataFrame): String =
-      df.queryExecution.executedPlan.toString()
-    val hashed = run()
-    val hashedRows = hashed.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(closingJoins(hashed).contains("ShuffledHashJoin"),
-      "default path must close with a shuffle-hash join")
+    import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression}
+    import org.apache.spark.sql.catalyst.optimizer.BuildRight
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec,
+      ShuffledHashJoinExec, SortMergeJoinExec}
+    // a denser graph than K4 so the A/B is non-trivial: 252 edges over
+    // 60 nodes, 84 triangles (brute-force count below)
+    val pairs = for (u <- 0L until 60L; v <- u + 1 until 60L
+      if (u * 31 + v * 17) % 7 == 0) yield (u, v)
+    val edges = pairs.toDF("u", "v")
+    val adj = pairs.flatMap { case (u, v) => Seq(u -> v, v -> u) }
+      .groupMap(_._1)(_._2).view.mapValues(_.toSet).toMap
+    val bruteForce = pairs.map { case (u, v) =>
+      (adj(u) & adj(v)).count(_ > v) }.sum
+    val aqe = new AdaptiveSparkPlanHelper {}
+    def onXY(keys: Seq[Expression]) =
+      keys.collect { case a: Attribute => a.name }.toSet == Set("x", "y")
+    // rows plus every join on (x, y) of the FINAL adaptive plan, read
+    // after collect() so AQE's runtime strategy choice is in it
+    def run(): (Map[Long, Long], Seq[SparkPlan], String) = {
+      val df = graft.operators.Graph.triangleCounts(edges)
+      val rows = df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val plan = df.queryExecution.executedPlan
+      val closing = aqe.collect(plan) {
+        case j: BroadcastHashJoinExec if onXY(j.leftKeys) => j
+        case j: ShuffledHashJoinExec if onXY(j.leftKeys) => j
+        case j: SortMergeJoinExec if onXY(j.leftKeys) => j
+      }
+      (rows, closing, plan.toString())
+    }
+    val (fitRows, fit, fitPlan) = run()
+    assert(bruteForce == 84 && fitRows.values.sum == 3L * bruteForce,
+      s"triangle total ${fitRows.values.sum / 3} vs brute force $bruteForce")
+    assert(fit.map(_.getClass) == Seq(classOf[BroadcastHashJoinExec]),
+      "default path must broadcast a closing edge list that fits:\n" + fitPlan)
+    val thresholds = Seq("spark.sql.autoBroadcastJoinThreshold",
+      "spark.sql.adaptive.autoBroadcastJoinThreshold")
+    try {
+      thresholds.foreach(spark.conf.set(_, "-1"))
+      val (bigRows, big, bigPlan) = run()
+      assert(big.size == 1 &&
+        big.collect { case j: ShuffledHashJoinExec => j.buildSide } == Seq(BuildRight),
+        "default path must shuffle-hash (build right) a closing edge list " +
+        "over the broadcast threshold:\n" + bigPlan)
+      assert(!big.exists(_.isInstanceOf[SortMergeJoinExec]),
+        "default path must never sort-merge the wedge stream:\n" + bigPlan)
+      assert(bigRows == fitRows,
+        s"shuffled hash diverged: ${(fitRows.toSet -- bigRows.toSet).take(3)}")
+    } finally thresholds.foreach(spark.conf.unset)
     spark.conf.set("graft.triangle.sortMerge", "true")
     try {
-      val merged = run()
-      assert(closingJoins(merged).contains("SortMergeJoin"),
-        "sortMerge path must close with a sort-merge join:\n" + closingJoins(merged))
-      val mergedRows = merged.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(mergedRows == hashedRows,
-        s"sort-merge diverged: only-hash=${(hashedRows.toSet -- mergedRows.toSet).take(3)}")
+      val (mergedRows, merged, mergedPlan) = run()
+      assert(merged.map(_.getClass) == Seq(classOf[SortMergeJoinExec]),
+        "sortMerge path must close with a sort-merge join:\n" + mergedPlan)
+      assert(mergedRows == fitRows,
+        s"sort-merge diverged: ${(fitRows.toSet -- mergedRows.toSet).take(3)}")
     } finally spark.conf.unset("graft.triangle.sortMerge")
   }
 
