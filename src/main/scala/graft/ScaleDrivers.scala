@@ -46,33 +46,16 @@ object ScaleDrivers {
     pairSum(Dedup.shingleSets(docs, "text", "doc_id", 2)
       .select(col("doc_id"), explode(col("sh")).as("g")), "g")
 
-  /** Containment prefix-filter candidate-stream size (r15, the
+  /** Containment prefix-filter candidate-stream size (the
     * dedup_containment_prefix cost driver at the gate's t = 0.8):
     * rare-prefix postings of the strictly-smaller side joined to the
-    * full index — the probe join's PRE-distinct row count, built with
-    * the exact expressions containmentPairsPrefix uses.
+    * full index — the probe join's PRE-distinct row count, built by
+    * the same `Dedup.postings` / `Dedup.prefixProbe` code
+    * containmentPairsPrefix runs.
     */
-  def prefixCandidates(docs: DataFrame, t: Double = 0.8): Long = {
-    val csets = Dedup.shingleSets(docs, "text", "doc_id", 2)
-      .select(col("doc_id"), expr("transform(sh, s -> xxhash64(s))").as("hs"))
-      .select(col("doc_id"), col("hs"), size(col("hs")).as("n_sh"))
-    val cinv = csets.select(col("doc_id"), col("n_sh"),
-      explode(col("hs")).as("h"))
-    val cdf = cinv.groupBy("h").agg(count(lit(1)).as("df_h"))
-    val byRarity = org.apache.spark.sql.expressions.Window
-      .partitionBy("doc_id").orderBy(col("df_h"), col("h"))
-    val cprefix = cinv.join(cdf, "h")
-      .withColumn("rk", row_number().over(byRarity))
-      .filter(col("rk") <=
-        col("n_sh") - ceil(lit(t) * col("n_sh") - lit(1e-9)) + 1)
-      .select(col("doc_id"), col("n_sh"), col("h"))
-    cprefix.alias("p")
-      .join(cinv.alias("i"), col("p.h") === col("i.h") &&
-        (col("p.n_sh") < col("i.n_sh") ||
-          (col("p.n_sh") === col("i.n_sh") &&
-            col("p.doc_id") < col("i.doc_id"))))
-      .count()
-  }
+  def prefixCandidates(docs: DataFrame, t: Double = 0.8): Long =
+    Dedup.prefixProbe(
+      Dedup.postings(Dedup.shingleSets(docs, "text", "doc_id", 2)), t).count()
 
   def main(args: Array[String]): Unit = {
     val dir = args(0)

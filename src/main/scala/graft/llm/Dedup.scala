@@ -449,12 +449,11 @@ object Dedup {
 
   /** Pins an inverted-index posting table to the session's full
     * shuffle width on its join key before an explosive self/probe
-    * join (r16, guide §2.5 input-skew family): the posting exchange is
-    * tiny (8-byte hashes), so AQE's parallelism-first coalescing
-    * floors it at `minPartitionSize` partitions — measured 5 tasks on
-    * 32 cores at sf0.1 — while the join OUTPUT is ~100× the input
-    * (Σ df² pair enumeration), serializing the one CPU-dense stage of
-    * the query (dedup_containment: 79 s task-time over 5 tasks).
+    * join (guide §2.5 input-skew family): the posting exchange is tiny
+    * (8-byte hashes), so AQE's parallelism-first coalescing floors it
+    * at a handful of `minPartitionSize` partitions, while the join
+    * OUTPUT is ~100× the input (Σ df² pair enumeration) — the one
+    * CPU-dense stage of the query would run on a few cores.
     * An explicit-count repartition on the join key replaces the
     * ENSURE_REQUIREMENTS exchange (same shuffle, pinned width), so it
     * adds no work at any scale; at 100 TB the posting exchange is
@@ -469,59 +468,77 @@ object Dedup {
     inv.repartition(graft.SessionConf.shuffleWidth(inv.sparkSession), col(key))
 
   // ---------------------------------------------------------------
+  // The hashed-posting kernel: each shingle-set pair operator is one
+  // inverted-index count join — postings on both sides, sharedCounts
+  // between them — plus its own pair predicate and output projection.
+  /** The inverted index of a shingle-set frame (`doc_id`, `sh`, …):
+    * one row per (doc, distinct shingle) carrying the doc's set size
+    * `n_sh` and the shingle's 8-byte hash `h` (same result as the
+    * strings — 64-bit collisions negligible — at ~10× fewer shuffle
+    * bytes), pinned on `h` ([[pinJoinWidth]]). Every other column of
+    * `sets` passes through.
+    */
+  private[graft] def postings(sets: DataFrame): DataFrame = {
+    val keep = sets.columns.toSeq.filter(_ != "sh").map(col)
+    pinJoinWidth(
+      sets.select(keep :+ size(col("sh")).as("n_sh") :+ explode(col("sh")).as("s"): _*)
+        .select(keep :+ col("n_sh") :+ xxhash64(col("s")).as("h"): _*),
+      "h")
+  }
+
+  /** Shared-key counts of every `l` × `r` doc pair that meets `pair`
+    * (over `l.*`/`r.*`): the shuffle-hash equi-join on `h`, then a
+    * map-side-combined groupBy, so per-pair work is a counter bump,
+    * never an array intersection. Both sides carry doc_id, n_sh and h;
+    * no pinning here — [[postings]] pins. Returns
+    * (ia, ib, common, na, nb), `ia`/`na` from `l`.
+    */
+  private[llm] def sharedCounts(l: DataFrame, r: DataFrame, pair: Column): DataFrame =
+    l.alias("l").join(r.hint("shuffle_hash").alias("r"),
+        col("l.h") === col("r.h") && pair)
+      .groupBy(col("l.doc_id").as("ia"), col("r.doc_id").as("ib"))
+      .agg(count(lit(1)).as("common"),
+        first(col("l.n_sh")).as("na"), first(col("r.n_sh")).as("nb"))
+
+  /** Size-ratio prune for a [[sharedCounts]] pair predicate: J ≥ t
+    * forces t ≤ |A|/|B| ≤ 1/t, so this is exact for Jaccard ≥ t (no
+    * recall loss) and prunes inside the join.
+    */
+  private[llm] def jaccardSizeBound(t: Double): Column = {
+    val tInv = lit(1.0 / t)
+    col("r.n_sh") <= col("l.n_sh") * tInv && col("l.n_sh") <= col("r.n_sh") * tInv
+  }
+
+  /** Jaccard of a [[sharedCounts]] row: common / (na + nb − common). */
+  private[llm] def jaccard: Column =
+    col("common").cast("double") / (col("na") + col("nb") - col("common"))
+
+  // ---------------------------------------------------------------
   // Exact n-gram Jaccard via inverted index (no LSH, no cross join):
   // explode shingles, self-join on the shingle (the inverted-index
   // bucket), count common shingles per pair, derive Jaccard.
   def ngramJaccardPairs(df: DataFrame, textCol: String, idCol: String,
       shingleN: Int, threshold: Double): DataFrame = {
-    // (a repartition + lineage cut lived here while shingling was an
-    // interpreted HOF chain; with the native WordShingles expression
-    // the shingle pass is scan-speed and needs no crutch)
-    val sets = shingleSets(df, textCol, idCol, shingleN)
-    // Inverted-index count join: index keyed by an 8-byte shingle hash
-    // (same result — 64-bit collisions negligible — at ~10× less
-    // shuffle bytes than shingle strings); set size rides along so the
-    // size-ratio filter prunes inside the join (J >= t forces
-    // t <= |A|/|B| <= 1/t — exact, no recall loss); common-shingle
-    // counts come from a map-side-combined groupBy, so per-pair work
-    // is a counter bump, never an array intersection.
-    // (A PPJoin-style rarest-prefix index was measured here and LOSES
-    // on this workload: with a ~1k-shingle vocabulary even the rare
-    // prefixes have high document frequency, and the array-verify on
-    // the candidate flood costs more than counting over the full
-    // index. On natural text with a long-tail vocabulary, prefix
-    // filtering is the right scale path; with dense vocabularies,
-    // MinHash-LSH (minhashNearDups) is.)
-    val inv = pinJoinWidth(
-      sets.select(col("doc_id"), size(col("sh")).as("n_sh"),
-          explode(col("sh")).as("s"))
-        .select(col("doc_id"), col("n_sh"), xxhash64(col("s")).as("h")),
-      "h")
-    val l = inv.alias("l"); val r = inv.hint("shuffle_hash").alias("r")
-    val tInv = lit(1.0 / threshold)
-    val common = l.join(r, col("l.h") === col("r.h")
-        && col("l.doc_id") < col("r.doc_id")
-        && col("r.n_sh") <= col("l.n_sh") * tInv
-        && col("l.n_sh") <= col("r.n_sh") * tInv)
-      .groupBy(col("l.doc_id").as("ia"), col("r.doc_id").as("ib"))
-      .agg(count(lit(1)).as("common"),
-        first(col("l.n_sh")).as("na"), first(col("r.n_sh")).as("nb"))
-    sealPairs(common
-      .select(col("ia"), col("ib"),
-        (col("common").cast("double") / (col("na") + col("nb") - col("common")))
-          .as("jaccard"))
+    // (A PPJoin-style rarest-prefix index LOSES on this workload: with
+    // a ~1k-shingle vocabulary even the rare prefixes have high
+    // document frequency, and the array-verify on the candidate flood
+    // costs more than counting over the full index. On natural text
+    // with a long-tail vocabulary, prefix filtering is the right scale
+    // path; with dense vocabularies, MinHash-LSH (minhashNearDups) is.)
+    val inv = postings(shingleSets(df, textCol, idCol, shingleN))
+    sealPairs(sharedCounts(inv, inv,
+        col("l.doc_id") < col("r.doc_id") && jaccardSizeBound(threshold))
+      .select(col("ia"), col("ib"), jaccard.as("jaccard"))
       .filter(col("jaccard") >= threshold))
   }
 
   /** Seals a pair-operator's output behind one hash re-exchange on the
-    * pair key (r16, guide §1.4/§7.2): the verified pair set is orders
-    * of magnitude smaller than the stages that produce it, but a
-    * caller that global-sorts (every oracle gate does) or range-writes
-    * the result makes Spark execute the sort's child TWICE — once to
+    * pair key (guide §1.4/§7.2): the verified pair set is orders of
+    * magnitude smaller than the stages that produce it, but a caller
+    * that global-sorts (every oracle gate does) or range-writes the
+    * result makes Spark execute the sort's child TWICE — once to
     * sample range bounds, once to write the sort exchange — re-running
-    * the expensive verify/aggregation chain both times (measured:
-    * the two duplicated final passes are 15-47 s of task time per
-    * query at sf0.1, ≈⅓ of dedup_containment_prefix). The exchange
+    * the expensive verify/aggregation chain both times. The exchange
     * materializes the pair set once, so downstream sampling reads a
     * shuffle boundary instead of recomputing the chain. Cost at any
     * scale: one extra shuffle of the OUTPUT-sized pair set — the
@@ -550,19 +567,8 @@ object Dedup {
     */
   def containmentPairs(df: DataFrame, textCol: String, idCol: String,
       shingleN: Int, threshold: Double): DataFrame = {
-    val sets = shingleSets(df, textCol, idCol, shingleN)
-    val inv = pinJoinWidth(
-      sets.select(col("doc_id"), size(col("sh")).as("n_sh"),
-          explode(col("sh")).as("s"))
-        .select(col("doc_id"), col("n_sh"), xxhash64(col("s")).as("h")),
-      "h")
-    val l = inv.alias("l"); val r = inv.hint("shuffle_hash").alias("r")
-    val common = l.join(r, col("l.h") === col("r.h")
-        && col("l.doc_id") < col("r.doc_id"))
-      .groupBy(col("l.doc_id").as("ia"), col("r.doc_id").as("ib"))
-      .agg(count(lit(1)).as("common"),
-        first(col("l.n_sh")).as("na"), first(col("r.n_sh")).as("nb"))
-    sealPairs(common
+    val inv = postings(shingleSets(df, textCol, idCol, shingleN))
+    sealPairs(sharedCounts(inv, inv, col("l.doc_id") < col("r.doc_id"))
       .select(col("ia"), col("ib"),
         (col("common").cast("double") / col("na")).as("containment_a"),
         (col("common").cast("double") / col("nb")).as("containment_b"))
@@ -576,88 +582,44 @@ object Dedup {
     * one of its (m − ⌈t·m⌉ + 1) globally-RAREST shingles with the
     * larger — if none of those land in the other set, common ≤
     * m − prefix < t·m. So only the rare prefix of the smaller side
-    * probes the full inverted index: candidate volume is bounded by
-    * the document frequency of the ~(1−t)·m rarest shingles per doc
-    * (tiny on the long-tail shingle vocabularies of natural text at
-    * 100 TB), not by Σ df² over every posting. Candidates are then
-    * verified exactly per pair (hashed-set intersection, O(na+nb)),
-    * and the final filter is the same double arithmetic as
-    * [[containmentPairs]] — the output is bit-identical (ContainSpec
-    * asserts set equality). All stages are bounded-key shuffles:
-    * shingle-hash df agg, per-doc rank window, probe join, pair
-    * distinct, two doc-key verify joins.
+    * probes the full inverted index ([[prefixProbe]]): candidate
+    * volume is bounded by the document frequency of the ~(1−t)·m
+    * rarest shingles per doc (tiny on the long-tail shingle
+    * vocabularies of natural text at 100 TB), not by Σ df² over every
+    * posting. Candidates are then verified exactly per pair
+    * (hashed-set intersection, O(na+nb)), and the final filter is the
+    * same double arithmetic as [[containmentPairs]] — the output is
+    * bit-identical (LlmSpec "containmentPairsPrefix is bit-identical
+    * to the full index join" and the AlgoPropertySpec prefix-filtered
+    * containment property assert set and value equality). All stages
+    * are bounded-key shuffles: shingle-hash df agg, per-doc rank
+    * window, probe join, pair distinct, two doc-key verify joins.
     *
-    * Measured at sf0.1 (20k docs, dense ~1k bigram vocabulary — the
-    * WORST case for prefix filtering, cf. the ngramJaccardPairs
-    * PPJoin note), isolated sessions, min-of-3, two runs each:
-    * 9.7-10.3 s vs 7.9-9.5 s for the full index join, identical 256
-    * rows. On THIS corpus every bigram's df is huge and uniform, so
-    * the t=0.8 rarity prefix (~0.2·m+1 shingles/doc) shrinks probe
-    * volume by only ~5× while paying a df aggregation + join and a
-    * per-doc rank window — a net loss AT 1×. The SCALE curve flips
-    * it (r15, SCALE_CONTAIN_PREFIX.json, ScaleGen 1×/3×/10× slices):
-    * classic 7.2 / 95.8 / 950.1 s (tail exponent 1.91 — the Σ df²
-    * quadratic) vs prefix 9.1 / 88.6 / 388.0 s (tail exponent 1.23)
-    * — 2.4× faster at 10× with the crossover between 1× and 3×.
-    * Read the exponents honestly (ScaleDrivers r15,
-    * `containment_prefix_candidates`): on THIS dense uniform
-    * vocabulary the prefix CANDIDATE volume is itself quadratic
-    * (driver exp 2.02; 6.8M/63.8M/728M — a near-constant ~5× below
-    * Σ C(df,2) at every scale), so the asymptotic win here is the
-    * constant 5×, which the 10× wall gap (2.4×) is still converging
-    * toward — the sub-quadratic 1.23 wall exponent is fixed-overhead
-    * amortization, not asymptotics. The EXPONENT advantage belongs to
-    * Zipfian natural-text vocabularies (Bayardo et al., WWW'07) — and
-    * since r16 that is MEASURED, not cited (ScaleContain,
-    * SCALE_CONTAIN_ZIPF/HEAPS.json, BASELINE.md "Round 16"): on a 10k
-    * power-law vocabulary the prefix wall reads 2.1/2.9/6.0 s at
-    * 1×/3×/10× (exp 0.45) vs classic 7.2/84.8/875.9 s (exp 2.08) —
-    * 145× at 10× — with the candidate driver still honestly quadratic
-    * on a FIXED vocabulary (exp 2.10, constant ~17,850× below
-    * Σ C(df,2)); under Heaps-law vocabulary growth (V ∝ corpus^0.55,
-    * as real corpora grow) the candidate exponent itself drops to
-    * 1.54/1.45-and-falling — the sub-quadratic mechanism at 100 TB.
-    * The classic form additionally SKEWS on Zipfian heads (the z0-z0
-    * posting pairs in single join keys — long one-core phases inside
-    * its 875.9 s run); head shingles never enter anyone's prefix, so
-    * this path dodges the skew as well as the volume. Both forms are
+    * On a dense uniform vocabulary (the sf testdata) every shingle's
+    * df is huge, so the rarity prefix shrinks probe volume only by a
+    * near-constant factor while paying a df aggregation + join and a
+    * per-doc rank window; the exponent advantage belongs to Zipfian
+    * natural-text vocabularies (Bayardo et al., WWW'07), where head
+    * shingles never enter anyone's prefix — so this path also dodges
+    * the head-key skew of the classic form. Both forms are
     * oracle-gated (`dedup_containment`, `dedup_containment_prefix`,
-    * same SQL) and spill-proved (SPILL_VERIFY); ContainSpec asserts
-    * bit-identical output.
+    * same SQL). Measurements: docs/HISTORY.md "Inverted-index pair
+    * kernel".
     */
   def containmentPairsPrefix(df: DataFrame, textCol: String,
       idCol: String, shingleN: Int, threshold: Double): DataFrame = {
-    // hs sorted ascending (r16): every use is order-independent — the
+    // hs sorted ascending: every use is order-independent — the
     // inverted index explodes it, n_sh is its size, and the verify
     // consumes it through the sorted-merge SortedIntersectCount kernel
     // below (one sort per DOC upfront vs a hash set per candidate
-    // PAIR in the old size(array_intersect(...)) verify).
+    // PAIR in a size(array_intersect(...)) verify).
     val sets = shingleSets(df, textCol, idCol, shingleN)
       .select(col("doc_id"),
         sort_array(expr("transform(sh, s -> xxhash64(s))")).as("hs"))
       .select(col("doc_id"), col("hs"), size(col("hs")).as("n_sh"))
     val inv = sets.select(col("doc_id"), col("n_sh"),
       explode(col("hs")).as("h"))
-    val dfreq = inv.groupBy("h").agg(count(lit(1)).as("df_h"))
-    // Rarest-first rank within each doc; deterministic tie-break on
-    // the hash. ceil(t·n − 1e-9) instead of ceil(t·n): when t·n is
-    // integral, float error must lengthen the prefix (lossless), never
-    // shorten it — the exact verify below re-applies the true bound.
-    val byRarity = Window.partitionBy("doc_id")
-      .orderBy(col("df_h"), col("h"))
-    val prefix = inv.join(dfreq, "h")
-      .withColumn("rk", row_number().over(byRarity))
-      .filter(col("rk") <=
-        col("n_sh") - ceil(lit(threshold) * col("n_sh") - lit(1e-9)) + 1)
-      .select(col("doc_id"), col("n_sh"), col("h"))
-    // The strictly-smaller side probes (lexicographic (n_sh, doc_id)
-    // so exactly one side of every pair probes, ties included).
-    val cand = pinJoinWidth(prefix, "h").alias("p")
-      .join(pinJoinWidth(inv, "h").hint("shuffle_hash").alias("i"),
-        col("p.h") === col("i.h") &&
-          (col("p.n_sh") < col("i.n_sh") ||
-            (col("p.n_sh") === col("i.n_sh") &&
-              col("p.doc_id") < col("i.doc_id"))))
+    val cand = prefixProbe(inv, threshold)
       .select(least(col("p.doc_id"), col("i.doc_id")).as("ia"),
         greatest(col("p.doc_id"), col("i.doc_id")).as("ib"))
       .distinct()
@@ -677,6 +639,40 @@ object Dedup {
         >= threshold))
   }
 
+  /** The rare prefix of every doc's posting list for threshold `t`:
+    * its (n_sh − ⌈t·n_sh⌉ + 1) globally-rarest hashes, as
+    * (doc_id, n_sh, h) rows of `inv`.
+    */
+  private def rarePrefix(inv: DataFrame, t: Double): DataFrame = {
+    val dfreq = inv.groupBy("h").agg(count(lit(1)).as("df_h"))
+    // Rarest-first rank within each doc; deterministic tie-break on
+    // the hash. ceil(t·n − 1e-9) instead of ceil(t·n): when t·n is
+    // integral, float error must lengthen the prefix (lossless), never
+    // shorten it — the exact verify re-applies the true bound.
+    val byRarity = Window.partitionBy("doc_id")
+      .orderBy(col("df_h"), col("h"))
+    inv.join(dfreq, "h")
+      .withColumn("rk", row_number().over(byRarity))
+      .filter(col("rk") <=
+        col("n_sh") - ceil(lit(t) * col("n_sh") - lit(1e-9)) + 1)
+      .select(col("doc_id"), col("n_sh"), col("h"))
+  }
+
+  /** The prefix-filter probe join: the [[rarePrefix]] of the
+    * strictly-smaller side of each pair (lexicographic (n_sh, doc_id),
+    * so exactly one side of every pair probes, ties included) joined
+    * to the full posting table `inv` on `h`, both pinned. One row per
+    * (prefix posting, matching posting) as `p.*`/`i.*` — the
+    * candidate stream before the pair distinct.
+    */
+  private[graft] def prefixProbe(inv: DataFrame, t: Double): DataFrame =
+    pinJoinWidth(rarePrefix(inv, t), "h").alias("p")
+      .join(pinJoinWidth(inv, "h").hint("shuffle_hash").alias("i"),
+        col("p.h") === col("i.h") &&
+          (col("p.n_sh") < col("i.n_sh") ||
+            (col("p.n_sh") === col("i.n_sh") &&
+              col("p.doc_id") < col("i.doc_id"))))
+
   /** Substring-level near-dup pairs over WINNOWING fingerprints
     * (MOSS candidate pairing): docs sharing ≥ `minShared` distinct
     * selected k-gram hashes, with the shared count and the overlap
@@ -687,26 +683,21 @@ object Dedup {
     * ~2/(w+1) winnowed fraction of all k-grams — at 100 TB that is
     * the difference between indexing every shingle
     * ([[ngramJaccardPairs]]) and indexing a fixed-density sample with
-    * a recall proof. Same join discipline as the other indexes:
-    * 8-byte keys, map-side pair counting, shuffle-hash hint; cost is
-    * the winnowed index's sum-of-df², with hot boilerplate
-    * fingerprints surfacing in the counts rather than hiding.
+    * a recall proof. Same [[sharedCounts]] kernel as the other
+    * indexes, keyed by the fingerprint itself (unpinned); cost is the
+    * winnowed index's sum-of-df², with hot boilerplate fingerprints
+    * surfacing in the counts rather than hiding.
     */
   def winnowNearDups(df: DataFrame, textCol: String, idCol: String,
       k: Int, w: Int, minShared: Int): DataFrame = {
     val fpsets = TextAnalysis.winnow(df, textCol, idCol, k, w)
-      .select(col("doc_id"), col("fp")).distinct()
-    val sized = fpsets.groupBy("doc_id").agg(count(lit(1)).as("n_fp"))
+      .select(col("doc_id"), col("fp").as("h")).distinct()
+    val sized = fpsets.groupBy("doc_id").agg(count(lit(1)).as("n_sh"))
     val inv = fpsets.join(sized, "doc_id")
-    val l = inv.alias("l"); val r = inv.hint("shuffle_hash").alias("r")
-    l.join(r, col("l.fp") === col("r.fp")
-        && col("l.doc_id") < col("r.doc_id"))
-      .groupBy(col("l.doc_id").as("ia"), col("r.doc_id").as("ib"))
-      .agg(count(lit(1)).as("n_shared"),
-        first(col("l.n_fp")).as("nfa"), first(col("r.n_fp")).as("nfb"))
-      .filter(col("n_shared") >= minShared)
-      .select(col("ia"), col("ib"), col("n_shared"),
-        (col("n_shared").cast("double") / least(col("nfa"), col("nfb")))
+    sharedCounts(inv, inv, col("l.doc_id") < col("r.doc_id"))
+      .filter(col("common") >= minShared)
+      .select(col("ia"), col("ib"), col("common").as("n_shared"),
+        (col("common").cast("double") / least(col("na"), col("nb")))
           .as("overlap_frac"))
   }
 
@@ -1030,8 +1021,8 @@ object Dedup {
     * [[nearDupClusters]] + keep-representatives for that policy.
     *
     * Scale shape: the [[ngramJaccardPairs]] 8-byte-hash inverted-index
-    * count join with the size-ratio prune, run twice with asymmetric
-    * sides — batch×existing (existing shingles are index-only; the
+    * count join ([[sharedCounts]]) with the size-ratio prune, run twice
+    * with asymmetric sides — batch×existing (existing shingles are index-only; the
     * served text never moves) and batch×batch. Per-batch cost is
     * Σ df_batch·(df_existing + df_batch) per shingle — batch-sized,
     * never corpus². Output: every batch doc with its blocker counts
@@ -1040,36 +1031,23 @@ object Dedup {
   def incrementalNearDedup(batch: DataFrame, existing: DataFrame,
       textCol: String, idCol: String, shingleN: Int,
       threshold: Double): DataFrame = {
-    val tInv = lit(1.0 / threshold)
-    def inv(df: DataFrame) = shingleSets(df, textCol, idCol, shingleN)
-      .select(col("doc_id"), size(col("sh")).as("n_sh"),
-        explode(col("sh")).as("s"))
-      .select(col("doc_id"), col("n_sh"), xxhash64(col("s")).as("h"))
-    val b = pinJoinWidth(inv(batch), "h")
-    def blockers(other: DataFrame, sameBatch: Boolean) = {
-      val l = b.alias("l")
-      val r = pinJoinWidth(other, "h").hint("shuffle_hash").alias("r")
-      val keyCond = if (sameBatch) col("r.doc_id") < col("l.doc_id") else lit(true)
-      l.join(r, col("l.h") === col("r.h") && keyCond
-          && col("r.n_sh") <= col("l.n_sh") * tInv
-          && col("l.n_sh") <= col("r.n_sh") * tInv)
-        .groupBy(col("l.doc_id").as("doc_id"), col("r.doc_id").as("other_id"))
-        .agg(count(lit(1)).as("common"),
-          first(col("l.n_sh")).as("na"), first(col("r.n_sh")).as("nb"))
-        .filter(col("common").cast("double")
-          / (col("na") + col("nb") - col("common")) >= threshold)
-        .groupBy("doc_id").agg(count(lit(1)).as("n"))
-    }
+    def inv(df: DataFrame) = postings(shingleSets(df, textCol, idCol, shingleN))
+    val b = inv(batch)
+    def blockers(other: DataFrame, pair: Column) =
+      sharedCounts(b, other, pair && jaccardSizeBound(threshold))
+        .filter(jaccard >= threshold)
+        .groupBy(col("ia").as("doc_id")).agg(count(lit(1)).as("n"))
     // a batch doc blocked by the corpus can't itself block its batch
     // peers (it is not admitted), so peer-blocking only counts
     // lower-id peers that are THEMSELVES corpus-clean — see the
     // admission-policy contract in the doc comment.
-    val corpusBlocked = blockers(inv(existing), sameBatch = false)
+    val corpusBlocked = blockers(inv(existing), lit(true))
       .withColumnRenamed("n", "n_corpus_blockers")
     val cleanIds = batch.select(col(idCol).as("doc_id"))
       .join(corpusBlocked.select("doc_id"), Seq("doc_id"), "left_anti")
     val peerBlocked = blockers(
-        b.join(cleanIds, "doc_id").hint("shuffle_hash"), sameBatch = true)
+        pinJoinWidth(b.join(cleanIds, "doc_id"), "h"),
+        col("r.doc_id") < col("l.doc_id"))
       .withColumnRenamed("n", "n_peer_blockers")
     batch.select(col(idCol).as("doc_id"))
       .join(corpusBlocked, Seq("doc_id"), "left")

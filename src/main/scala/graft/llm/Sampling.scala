@@ -202,8 +202,9 @@ object Sampling {
     * auditable.
     *
     * Scale shape: the same 8-byte-hash inverted-index count join as
-    * [[Dedup.ngramJaccardPairs]] (size-ratio prune included — exact
-    * for a Jaccard threshold), but one side is ONLY the holdout
+    * [[Dedup.ngramJaccardPairs]] (`Dedup.postings` +
+    * `Dedup.sharedCounts`, size-ratio prune included — exact for a
+    * Jaccard threshold), but one side is ONLY the holdout
     * shingles: cost is Σ df_train · df_holdout per shingle, holdout
     * df a ~tenth of the corpus's. Holdout docs are never dropped.
     */
@@ -213,28 +214,14 @@ object Sampling {
     val sp = splitByHash(df, textCol, bounds, modulus)
       .select(col(idCol).as("doc_id"), col("split_hash"), col("split"),
         col(textCol).as("text_"))
-    val inv = Dedup.shingleSets(sp, "text_", "doc_id", shingleN)
+    val sets = Dedup.shingleSets(sp, "text_", "doc_id", shingleN)
       .join(sp.select(col("doc_id"), col("split")), "doc_id")
-      .select(col("doc_id"), col("split"), size(col("sh")).as("n_sh"),
-        explode(col("sh")).as("s"))
-      .select(col("doc_id"), col("split"), col("n_sh"),
-        xxhash64(col("s")).as("h"))
-    // join-width pin on the explosive posting join — see
-    // Dedup.pinJoinWidth for the rationale and scale argument
-    val tr = Dedup.pinJoinWidth(
-      inv.filter(col("split") =!= holdout), "h").alias("l")
-    val te = Dedup.pinJoinWidth(
-      inv.filter(col("split") === holdout), "h").hint("shuffle_hash").alias("r")
-    val tInv = lit(1.0 / threshold)
-    val leaks = tr.join(te, col("l.h") === col("r.h")
-        && col("r.n_sh") <= col("l.n_sh") * tInv
-        && col("l.n_sh") <= col("r.n_sh") * tInv)
-      .groupBy(col("l.doc_id").as("doc_id"), col("r.doc_id").as("test_id"))
-      .agg(count(lit(1)).as("common"),
-        first(col("l.n_sh")).as("na"), first(col("r.n_sh")).as("nb"))
-      .filter(col("common").cast("double")
-        / (col("na") + col("nb") - col("common")) >= threshold)
-      .groupBy("doc_id").agg(count(lit(1)).as("n_leak_partners"))
+    val leaks = Dedup.sharedCounts(
+        Dedup.postings(sets.filter(col("split") =!= holdout)),
+        Dedup.postings(sets.filter(col("split") === holdout)),
+        Dedup.jaccardSizeBound(threshold))
+      .filter(Dedup.jaccard >= threshold)
+      .groupBy(col("ia").as("doc_id")).agg(count(lit(1)).as("n_leak_partners"))
     sp.select(col("doc_id"), col("split_hash"), col("split"))
       .join(leaks, Seq("doc_id"), "left")
       .select(col("doc_id"), col("split_hash"), col("split"),

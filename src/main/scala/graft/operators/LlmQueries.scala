@@ -113,7 +113,9 @@ object LlmQueries {
 
   /** Shared oracle for `dedup_containment` and
     * `dedup_containment_prefix`: the two engine forms are bit-identical
-    * (ContainSpec asserts set equality), so one SQL gates both — the
+    * (LlmSpec "containmentPairsPrefix is bit-identical to the full index
+    * join" and the AlgoPropertySpec prefix-filtered containment property
+    * assert set and value equality), so one SQL gates both — the
     * classic inverted-index join and the prefix-filtered 100 TB path.
     */
   private lazy val ContainmentOracleSql: String =
@@ -1147,14 +1149,11 @@ object LlmQueries {
     // tiny-inside-huge has small Jaccard but containment 1.0) --------
     QDef("dedup_containment", (s, dir) =>
       // classic inverted-index form. The lossless prefix-filtered
-      // variant (containmentPairsPrefix, ContainSpec: bit-identical)
-      // was A/B-benched at sf0.1 (min-of-3, isolated): 13.9 s vs
-      // 11.4 s for this form — this corpus's dense 931-shingle
-      // vocabulary gives every shingle a huge df, so the rarity
-      // prefix barely shrinks candidates while adding a df join + a
-      // per-doc rank window. On a Zipfian real corpus the prefix
-      // variant is the 100 TB path (Bayardo et al., WWW'07) — gated
-      // below as dedup_containment_prefix against this same oracle.
+      // variant (containmentPairsPrefix, bit-identical per LlmSpec and
+      // AlgoPropertySpec) is the 100 TB path on Zipfian real corpora
+      // (Bayardo et al., WWW'07) — gated below as
+      // dedup_containment_prefix against this same oracle. Timings of
+      // the two forms: docs/HISTORY.md "Inverted-index pair kernel".
       Dedup.containmentPairs(Tables.load(s, dir, "documents"), "text",
           "doc_id", shingleN = 2, threshold = 0.8)
         .orderBy("ia", "ib"),
@@ -1162,10 +1161,10 @@ object LlmQueries {
 
     // ---- the 100 TB containment path (Bayardo prefix filtering),
     // oracle-gated against the SAME SQL as dedup_containment: the two
-    // engine forms are proven bit-identical (ContainSpec), so the
-    // swap-gate discipline (r8: profile_table_approx precedent) gives
-    // the scale-recommended form its own green correctness row rather
-    // than leaving it spec-only --------------------------------------
+    // engine forms are proven bit-identical (LlmSpec,
+    // AlgoPropertySpec), so the swap-gate discipline (r8:
+    // profile_table_approx precedent) gives the scale-recommended form
+    // its own green correctness row rather than leaving it spec-only -
     QDef("dedup_containment_prefix", (s, dir) =>
       Dedup.containmentPairsPrefix(Tables.load(s, dir, "documents"),
           "text", "doc_id", shingleN = 2, threshold = 0.8)

@@ -25,6 +25,8 @@ import graft.operators.{FuzzyJoin, ZOrder}
   *  - Misra-Gries heavy hitters: the exact freq·(k+1) > n set, end to
   *    end (a sketch false-negative would drop a row);
   *  - inverted-index n-gram Jaccard == brute-force set Jaccard;
+  *  - prefix-filtered containment == full-index containment ==
+  *    brute-force set containment;
   *  - Z-order interleave: Column and SQL forms equal the reference
   *    bit-interleave and stay injective.
   */
@@ -226,7 +228,9 @@ class AlgoPropertySpec extends SparkSpec {
     * ceil() could shorten the prefix by one) and dense shared pools
     * (where rarity ranks tie and the tie-break matters). Equality
     * against the full-index form on both pair sets AND both double
-    * containment values is the property the r15 gate pair relies on.
+    * containment values is the property the r15 gate pair relies on;
+    * the full-index form is itself checked against a brute-force
+    * replay over distinct bigram sets (max(common/na, common/nb) ≥ t).
     */
   test("prefix-filtered containment == full-index containment on random " +
       "corpora incl. integral-threshold boundaries") {
@@ -256,6 +260,21 @@ class AlgoPropertySpec extends SparkSpec {
         assert(pref(p) == v, s"seed=$seed thr=$thr $p: ${pref(p)} vs $v")
       }
       assert(full.nonEmpty, s"vacuous at seed=$seed thr=$thr")
+      // third result: brute-force replay over distinct bigram sets
+      def bigrams(t: String): Set[String] =
+        t.split(" ").filter(_.nonEmpty).sliding(2).filter(_.length == 2)
+          .map(_.mkString(" ")).toSet
+      val brute = (for {
+        (ai, at) <- docs; (bi, bt) <- docs if ai < bi
+        sa = bigrams(at); sb = bigrams(bt) if sa.nonEmpty && sb.nonEmpty
+        common = (sa & sb).size.toDouble
+        ca = common / sa.size; cb = common / sb.size
+        if math.max(ca, cb) >= thr
+      } yield (ai, bi) -> ((ca, cb))).toMap
+      assert(full == brute,
+        s"seed=$seed thr=$thr brute-force missed=${(brute.keySet -- full.keySet).take(3)} " +
+          s"extra=${(full.keySet -- brute.keySet).take(3)} " +
+          s"values=${brute.filter { case (p, v) => full.get(p).exists(_ != v) }.take(3)}")
     }
   }
 

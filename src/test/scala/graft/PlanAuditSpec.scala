@@ -1,6 +1,12 @@
 package graft
 
-import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec}
+import org.apache.spark.sql.catalyst.expressions.Attribute
+import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, Partitioning, RangePartitioning}
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ShuffleExchangeExec}
+import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastNestedLoopJoinExec,
+  CartesianProductExec, ShuffledHashJoinExec}
 import org.apache.spark.sql.execution.window.WindowExec
 
 /** Scale-safety CI: no gate query may plan a cartesian product, a
@@ -131,5 +137,65 @@ class PlanAuditSpec extends SparkSpec {
     assert(failed.isEmpty,
       s"queries failing analysis (audited all others first): ${failed.toSeq.sorted
         .map { case (n, m) => s"$n: $m" }.mkString("; ")}")
+  }
+
+  /** The hashed-posting kernel's plan contract (`Dedup.postings` +
+    * `Dedup.sharedCounts`), read from each caller's initial physical
+    * plan (AQE not yet run): every join on the posting key `h` is a
+    * ShuffledHashJoin whose two sides are hash-partitioned on `h` at
+    * the session's shuffle width by an explicit-width
+    * (REPARTITION_BY_NUM) exchange, and the two pair operators reach
+    * the gate's global sort through a hash exchange that partitions
+    * the pairs on (ia, ib).
+    */
+  test("posting joins: both sides pinned on h at the shuffle width, " +
+      "shuffled-hash joined, pair sets hash-partitioned on (ia, ib)") {
+    val width = SessionConf.shuffleWidth(spark)
+    def initialPlan(name: String): SparkPlan =
+      SparkEntry.queries(name)(spark, sfDir).queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.executedPlan
+        case p => p
+      }
+    def hashNames(p: Partitioning): Option[Seq[String]] = p match {
+      case h: HashPartitioning =>
+        Some(h.expressions.collect { case a: Attribute => a.name })
+      case _ => None
+    }
+    // incremental: the corpus-blocker join is planned twice (it feeds
+    // the clean-peer anti-join and the output join), plus the peer join
+    val postingJoins = Map("dedup_containment" -> 1, "dedup_ngram_jaccard" -> 1,
+      "dedup_incremental_neardup" -> 3, "split_decontaminate" -> 1)
+    for ((name, nJoins) <- postingJoins) {
+      val plan = initialPlan(name)
+      val joins = plan.collect {
+        case j: BaseJoinExec if j.leftKeys.exists(_.references.exists(_.name == "h")) => j
+      }
+      assert(joins.size == nJoins, s"$name: posting joins ${joins.map(_.nodeName)}")
+      joins.foreach { j =>
+        assert(j.isInstanceOf[ShuffledHashJoinExec], s"$name: ${j.nodeName} on h")
+        // a side may reach the join through a partitioning-preserving
+        // node (incremental's peer side: a broadcast join onto the
+        // pinned batch postings), so read the side's partitioning and
+        // the first shuffle under it
+        j.children.foreach { side =>
+          assert(hashNames(side.outputPartitioning).contains(Seq("h")) &&
+            side.outputPartitioning.numPartitions == width,
+            s"$name: posting side ${side.outputPartitioning} (want h × $width)")
+          val ex = side.collectFirst { case e: ShuffleExchangeExec => e }
+          assert(ex.exists(_.shuffleOrigin == REPARTITION_BY_NUM),
+            s"$name: posting side shuffle ${ex.map(_.shuffleOrigin)}")
+        }
+      }
+    }
+    for (name <- Seq("dedup_containment", "dedup_ngram_jaccard")) {
+      val sortEx = initialPlan(name).collectFirst {
+        case e: ShuffleExchangeExec if e.outputPartitioning.isInstanceOf[RangePartitioning] => e
+      }.getOrElse(fail(s"$name: no range exchange under the gate's sort"))
+      assert(hashNames(sortEx.child.outputPartitioning).contains(Seq("ia", "ib")),
+        s"$name: pairs reach the sort as ${sortEx.child.outputPartitioning}")
+      val below = sortEx.child.collectFirst { case e: ShuffleExchangeExec => e }
+      assert(below.exists(_.outputPartitioning.isInstanceOf[HashPartitioning]),
+        s"$name: no hash exchange under the pair projection")
+    }
   }
 }
