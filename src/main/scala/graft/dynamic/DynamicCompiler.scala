@@ -118,10 +118,16 @@ object DynamicCompiler {
       }
     }
 
+  private val fetchCache =
+    new java.util.concurrent.ConcurrentHashMap[(String, Long, Long), Path]()
+
   /** Copy a scheme-qualified dependency (single jar or "dir/ *"
     * wildcard, no space) to a local temp dir via the Hadoop FileSystem
-    * API and return the local paths. Temp dirs ride the same
-    * shutdown-hook cleanup as compile outputs.
+    * API and return the local paths. Fetches are memoized per process
+    * by source URI, length and modification time, like compiles: an
+    * unchanged jar keeps one local path (so the compile cache hits and
+    * nothing new is shipped), a rewritten one is fetched again. Temp
+    * dirs ride the same shutdown-hook cleanup as compile outputs.
     */
   private def fetchRemote(spec: String): Seq[Path] = {
     import org.apache.hadoop.fs.{Path => HPath}
@@ -132,23 +138,22 @@ object DynamicCompiler {
       if (wildcard)
         fs.listStatus(base).toSeq
           .filter(s => s.isFile && s.getPath.getName.endsWith(".jar"))
-          .map(_.getPath)
-      else Seq(base)
-    if (sources.isEmpty) Seq.empty
-    else {
-      val tmp = Files.createTempDirectory("graft-deps")
-      Cleanup.register(tmp)
-      sources.map { src =>
-        val dst = tmp.resolve(src.getName)
-        fs.copyToLocalFile(false, src, new HPath(dst.toUri), true)
-        dst
-      }
+      else Seq(fs.getFileStatus(base))
+    sources.map { src =>
+      fetchCache.computeIfAbsent(
+        (src.getPath.toString, src.getLen, src.getModificationTime), _ => {
+          val tmp = Files.createTempDirectory("graft-deps")
+          Cleanup.register(tmp)
+          val dst = tmp.resolve(src.getPath.getName)
+          fs.copyToLocalFile(false, src.getPath, new HPath(dst.toUri), true)
+          dst
+        })
     }
   }
 
-  /** Process-wide memo: pipelines compile each dynamic stage at
-    * validate time AND at run time — identical (source, classpath)
-    * pairs reuse the first compilation (~2s of scalac each).
+  /** Process-wide memo: identical (source, classpath) pairs reuse the
+    * first compilation (~2s of scalac each), so a validated pipeline's
+    * run and every repeat run compile nothing.
     */
   private val compileCache =
     new java.util.concurrent.ConcurrentHashMap[(String, Seq[Path]), Compiled]()
@@ -301,10 +306,8 @@ object DynamicCompiler {
   // three shapes: GraftMain.run(ctx) / run(SparkSession) /
   // static main(Array[String]).
 
-  def runProgram(obj: AnyRef, spark: SparkSession, args: Map[String, String]): Unit = {
-    val prevCl = Thread.currentThread().getContextClassLoader
-    Thread.currentThread().setContextClassLoader(obj.getClass.getClassLoader)
-    try {
+  def runProgram(obj: AnyRef, spark: SparkSession, args: Map[String, String]): Unit =
+    withContextLoader(obj.getClass.getClassLoader) {
       obj match {
         case gm: GraftMain => gm.run(GraftContext(spark, args))
         case _ =>
@@ -328,7 +331,17 @@ object DynamicCompiler {
               }
           }
       }
-    } finally Thread.currentThread().setContextClassLoader(prevCl)
+    }
+
+  /** Runs `body` with `cl` as the thread's context classloader, so
+    * reflective lookups in user code (encoders, deserialization) see
+    * the compiled classes.
+    */
+  private[graft] def withContextLoader[T](cl: ClassLoader)(body: => T): T = {
+    val t = Thread.currentThread()
+    val prev = t.getContextClassLoader
+    t.setContextClassLoader(cl)
+    try body finally t.setContextClassLoader(prev)
   }
 }
 

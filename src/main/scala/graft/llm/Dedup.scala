@@ -245,11 +245,10 @@ object Dedup {
     val intra = ma.join(mb, "rep_id")
       .filter(col("da") < col("db"))
       .select(col("da").as("ia"), col("db").as("ib"), lit(1.0).as("jaccard"))
-    // sealPairs (r17, VERDICT r16 #4): the gate global-sorts this
-    // result, and range partitioning executes its child twice (sample
-    // pass + shuffle pass) — the same double-execution the other three
-    // pair operators had sealed in r16. One hash re-exchange of the
-    // OUTPUT-sized pair set materializes the LSH/verify chain once.
+    // sealPairs: the gate global-sorts this result, and range
+    // partitioning executes its child twice (sample pass + shuffle
+    // pass). One hash re-exchange of the OUTPUT-sized pair set
+    // materializes the LSH/verify chain once.
     sealPairs(cross.union(intra))
   }
 
@@ -526,10 +525,10 @@ object Dedup {
     // with a long-tail vocabulary, prefix filtering is the right scale
     // path; with dense vocabularies, MinHash-LSH (minhashNearDups) is.)
     val inv = postings(shingleSets(df, textCol, idCol, shingleN))
-    sealPairs(sharedCounts(inv, inv,
+    sharedCounts(inv, inv,
         col("l.doc_id") < col("r.doc_id") && jaccardSizeBound(threshold))
       .select(col("ia"), col("ib"), jaccard.as("jaccard"))
-      .filter(col("jaccard") >= threshold))
+      .filter(col("jaccard") >= threshold)
   }
 
   /** Seals a pair-operator's output behind one hash re-exchange on the
@@ -540,9 +539,15 @@ object Dedup {
     * sample range bounds, once to write the sort exchange — re-running
     * the expensive verify/aggregation chain both times. The exchange
     * materializes the pair set once, so downstream sampling reads a
-    * shuffle boundary instead of recomputing the chain. Cost at any
-    * scale: one extra shuffle of the OUTPUT-sized pair set — the
-    * smallest relation in the pipeline. AQE coalesces it freely.
+    * shuffle boundary instead of recomputing the chain. It is a real
+    * exchange where the pair set does not already arrive hash-
+    * partitioned on the pair key: [[minhashNearDups]] (a union of
+    * joins) and [[containmentPairsPrefix]] (verify joins on the doc
+    * keys). The [[sharedCounts]] operators need none — their pair
+    * aggregation's exchange already partitions on the pair key, and
+    * Spark's EnsureRequirements would drop a repartition there. Cost:
+    * one shuffle of the OUTPUT-sized pair set, the smallest relation
+    * in the pipeline; AQE coalesces it freely.
     */
   private def sealPairs(pairs: DataFrame): DataFrame =
     pairs.repartition(col("ia"), col("ib"))
@@ -568,12 +573,12 @@ object Dedup {
   def containmentPairs(df: DataFrame, textCol: String, idCol: String,
       shingleN: Int, threshold: Double): DataFrame = {
     val inv = postings(shingleSets(df, textCol, idCol, shingleN))
-    sealPairs(sharedCounts(inv, inv, col("l.doc_id") < col("r.doc_id"))
+    sharedCounts(inv, inv, col("l.doc_id") < col("r.doc_id"))
       .select(col("ia"), col("ib"),
         (col("common").cast("double") / col("na")).as("containment_a"),
         (col("common").cast("double") / col("nb")).as("containment_b"))
       .filter(greatest(col("containment_a"), col("containment_b"))
-        >= threshold))
+        >= threshold)
   }
 
   /** Exact containment pairs via LOSSLESS prefix filtering (the

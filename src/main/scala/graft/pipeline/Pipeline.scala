@@ -18,14 +18,21 @@ final class Pipeline(spec: PipelineSpec) {
 
   /** Deploy-time validation (reference configurePipeline semantics):
     * structural checks + per-stage validate (deployCompile), failures
-    * collected, not thrown one by one.
+    * collected, not thrown one by one. Known args are substituted;
+    * unknown macros stay in place and the checks that depend on them
+    * are skipped (reference containsMacro gate) — run() resolves
+    * strictly.
     */
-  def validate(runtimeArgs: Map[String, String] = Map.empty): Seq[String] = {
+  def validate(runtimeArgs: Map[String, String] = Map.empty): Seq[String] =
+    check(spec.resolveMacros(runtimeArgs, strict = false))._2
+
+  /** Builds every stage of `sp` once, in topological order, and checks
+    * the graph and each stage. Returns the built stages (none when the
+    * graph cannot be ordered or a stage type is unknown) and the
+    * collected errors.
+    */
+  private def check(sp: PipelineSpec): (Seq[Stage], Seq[String]) = {
     val errs = Seq.newBuilder[String]
-    // deploy-time semantics: substitute known args, leave unknown
-    // macros in place and skip the checks that depend on them
-    // (reference containsMacro gate); run() resolves strictly.
-    val sp = spec.resolveMacrosLenient(runtimeArgs)
     val names = sp.stages.map(_.name)
     names.diff(names.distinct).distinct.foreach(n =>
       errs += s"duplicate stage name '$n'")
@@ -33,30 +40,29 @@ final class Pipeline(spec: PipelineSpec) {
       if (!names.contains(c.from)) errs += s"connection from unknown stage '${c.from}'"
       if (!names.contains(c.to)) errs += s"connection to unknown stage '${c.to}'"
     }
-    try {
-      val stages = sp.topoOrder.map(s => s.name -> StageRegistry.build(s)).toMap
-      stages.values.foreach {
-        case c: ComputeStage => errs ++= c.validate().map(e => s"stage '${c.name}': $e")
-        case _ =>
-      }
-      sp.stages.foreach { s =>
-        val ins = sp.inputsOf(s.name)
-        val badUpstream = ins.filter(i => stages.get(i).exists(_.isInstanceOf[SinkStage]))
-        badUpstream.foreach(i => errs += s"stage '${s.name}' reads from sink '$i'")
-        stages(s.name) match {
+    val stages = try {
+      val built = sp.topoOrder.map(s => StageRegistry.build(s, sp.inputsOf(s.name)))
+      val byName = built.map(st => st.name -> st).toMap
+      built.foreach { st =>
+        errs ++= st.validate().map(e => s"stage '${st.name}': $e")
+        val ins = sp.inputsOf(st.name)
+        val badUpstream = ins.filter(i => byName.get(i).exists(_.isInstanceOf[SinkStage]))
+        badUpstream.foreach(i => errs += s"stage '${st.name}' reads from sink '$i'")
+        st match {
           case _: SourceStage if ins.nonEmpty =>
-            errs += s"source '${s.name}' cannot have inputs"
+            errs += s"source '${st.name}' cannot have inputs"
           case _: DynamicProgram => // action node: inputs optional
           case _: PySparkProgram => // action node: inputs optional (drives own IO)
           case _: ComputeStage if ins.isEmpty =>
-            errs += s"compute '${s.name}' has no input"
+            errs += s"compute '${st.name}' has no input"
           case _: SinkStage if ins.size != 1 =>
-            errs += s"sink '${s.name}' needs exactly one input, has ${ins.size}"
+            errs += s"sink '${st.name}' needs exactly one input, has ${ins.size}"
           case _ =>
         }
       }
-    } catch { case e: IllegalArgumentException => errs += e.getMessage }
-    errs.result()
+      built
+    } catch { case e: IllegalArgumentException => errs += e.getMessage; Nil }
+    (stages, errs.result())
   }
 
   /** Run the pipeline. Returns the DataFrame produced for each stage
@@ -75,24 +81,21 @@ final class Pipeline(spec: PipelineSpec) {
 
   def runWithLineage(spark: SparkSession,
       runtimeArgs: Map[String, String] = Map.empty): (Map[String, DataFrame], Seq[LineageEntry]) = {
-    val errors = validate(runtimeArgs)
+    val resolved = spec.resolveMacros(runtimeArgs)
+    val (stages, errors) = check(resolved)
     if (errors.nonEmpty)
       throw new IllegalStateException(
         "pipeline validation failed:\n" + errors.mkString("\n"))
-    val resolved = spec.resolveMacros(runtimeArgs)
     val ctx = PipelineContext(spark, runtimeArgs)
     var results = Map.empty[String, DataFrame]
     val lineage = Seq.newBuilder[LineageEntry]
 
-    resolved.topoOrder.foreach { s =>
-      val stage = StageRegistry.build(s)
+    stages.foreach { stage =>
+      val s = stage.spec
       val inputNames = resolved.inputsOf(s.name)
       val inputs = inputNames.map(results)
       val out: Option[DataFrame] = stage match {
         case src: SourceStage => Some(src.read(ctx))
-        case c: SqlCompute =>
-          c.inputNames = inputNames
-          Some(c.transform(ctx, inputs))
         case c: ComputeStage => Some(c.transform(ctx, inputs))
         case k: SinkStage => k.write(ctx, inputs.head); None
       }

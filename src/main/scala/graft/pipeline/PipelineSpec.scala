@@ -42,29 +42,16 @@ final case class PipelineSpec(stages: Seq[StageSpec], connections: Seq[Connectio
     order.result()
   }
 
-  /** Substitute `${key}` macros in every property value (and fail on
-    * unresolved macros, like the reference does at runtime).
+  /** Substitute `${key}` macros in every property value. Strict (run
+    * time) fails on an unresolved macro, like the reference does;
+    * lenient (deploy time) leaves it in place, since the reference's
+    * containsMacro gate defers the checks that depend on it.
     */
-  def resolveMacros(args: Map[String, String]): PipelineSpec = {
-    val Macro = raw"\$$\{([^}]+)\}".r
-    def subst(v: String): String = Macro.replaceAllIn(v, m =>
-      scala.util.matching.Regex.quoteReplacement(
-        args.getOrElse(m.group(1), throw new IllegalArgumentException(
-          s"unresolved macro $${${m.group(1)}}"))))
-    copy(stages = stages.map(s => s.copy(properties = s.properties.map {
-      case (k, v) => k -> subst(v)
-    })))
-  }
-
-  /** Deploy-time form: substitute what's known, leave unknown
-    * `${macros}` in place (the reference's containsMacro gate defers
-    * their validation to run time).
-    */
-  def resolveMacrosLenient(args: Map[String, String]): PipelineSpec = {
-    val Macro = raw"\$$\{([^}]+)\}".r
-    def subst(v: String): String = Macro.replaceAllIn(v, m =>
-      scala.util.matching.Regex.quoteReplacement(
-        args.getOrElse(m.group(1), m.matched)))
+  def resolveMacros(args: Map[String, String], strict: Boolean = true): PipelineSpec = {
+    def subst(v: String): String = PipelineSpec.Macro.replaceAllIn(v, m =>
+      scala.util.matching.Regex.quoteReplacement(args.getOrElse(m.group(1),
+        if (strict) throw new IllegalArgumentException(s"unresolved macro $${${m.group(1)}}")
+        else m.matched)))
     copy(stages = stages.map(s => s.copy(properties = s.properties.map {
       case (k, v) => k -> subst(v)
     })))
@@ -72,6 +59,8 @@ final case class PipelineSpec(stages: Seq[StageSpec], connections: Seq[Connectio
 }
 
 object PipelineSpec {
+
+  private val Macro = raw"\$$\{([^}]+)\}".r
 
   def hasMacro(value: String): Boolean = value.contains("${")
 

@@ -18,25 +18,29 @@ final case class PipelineContext(spark: SparkSession,
   * (`expr(...)`), per SURVEY.md §2.3 — the engine adds no second
   * expression language.
   */
-sealed trait Stage { def spec: StageSpec; def name: String = spec.name }
+sealed trait Stage {
+  def spec: StageSpec
+  def name: String = spec.name
+  /** Deploy-time validation hook (deployCompile analogue). */
+  def validate(): Seq[String] = Nil
+}
 
 trait SourceStage extends Stage { def read(ctx: PipelineContext): DataFrame }
 
 trait ComputeStage extends Stage {
   def transform(ctx: PipelineContext, inputs: Seq[DataFrame]): DataFrame
-  /** Deploy-time validation hook (deployCompile analogue). */
-  def validate(): Seq[String] = Nil
 }
 
 trait SinkStage extends Stage { def write(ctx: PipelineContext, input: DataFrame): Unit }
 
 /** Builds stages from specs. Property conventions:
   * single-input computes read `inputs.head`; multi-input computes
-  * (join/union/setop) follow connection order.
+  * (join/union/setop) follow connection order. `inputNames` are the
+  * upstream stage names in that order (the `sql` stage's view names).
   */
 object StageRegistry {
 
-  def build(spec: StageSpec): Stage = spec.stageType match {
+  def build(spec: StageSpec, inputNames: Seq[String] = Nil): Stage = spec.stageType match {
     // ---- sources --------------------------------------------------
     case "parquet" | "csv" | "json" | "text" | "orc" => new FormatSource(spec)
     case "jdbc"   => new JdbcSource(spec)
@@ -92,7 +96,7 @@ object StageRegistry {
     case "union"     => new UnionCompute(spec)
     case "intersect" => new SetOpCompute(spec, _ intersect _)
     case "except"    => new SetOpCompute(spec, _ except _)
-    case "sql"       => new SqlCompute(spec)
+    case "sql"       => new SqlCompute(spec, inputNames)
     case "cache"     => new ExprCompute(spec, (df, _) => df.cache())
     // eager lineage cut: materializes ONCE and replaces the subtree —
     // the repo-wide alternative to cache() when a DAG fans out over an
@@ -418,8 +422,7 @@ final class SetOpCompute(val spec: StageSpec,
 /** SQL over inputs registered as views named by their upstream stage
   * (reference registerTempTable flow, ScalaSparkTest.java:279-280).
   */
-final class SqlCompute(val spec: StageSpec) extends ComputeStage {
-  var inputNames: Seq[String] = Nil // set by the executor
+final class SqlCompute(val spec: StageSpec, inputNames: Seq[String]) extends ComputeStage {
   def transform(ctx: PipelineContext, inputs: Seq[DataFrame]): DataFrame = {
     inputNames.zip(inputs).foreach { case (n, df) => df.createOrReplaceTempView(n) }
     ctx.spark.sql(spec.properties("sql"))
@@ -427,64 +430,74 @@ final class SqlCompute(val spec: StageSpec) extends ComputeStage {
 }
 
 // -------------------------------------------------------------------
-// Dynamic (runtime-compiled) compute/sink — the reference's core.
+// Dynamic (runtime-compiled) stages — the reference's core.
 
-final class DynamicCompute(val spec: StageSpec) extends ComputeStage {
-  private val methodName = spec.properties.getOrElse("methodName", "transform")
-  private def code = spec.properties("scalaCode")
-  private def deps = DynamicCompiler.expandDependencies(
+/** The one compile → ship → load path of `scalaCompute`, `scalaSink`
+  * and `scalaProgram`. Per stage instance, `dependencies` is expanded
+  * once and `scalaCode` compiled once (through the process-wide
+  * compile cache) with those jars on the classpath; `entry` is the
+  * loaded object after the stage's shape check. Compute and sink
+  * bodies are wrapped into a generated object; a program names its
+  * own in `mainClass`.
+  */
+sealed trait DynamicStage[E] extends Stage {
+  protected def resolve(obj: AnyRef): E
+  protected def code: String = spec.properties("scalaCode")
+  protected def objectName: String = DynamicCompiler.classNameFor(name, code)
+  protected def source: String = DynamicCompiler.wrap(objectName, code)
+
+  private lazy val deps = DynamicCompiler.expandDependencies(
     spec.properties.getOrElse("dependencies", ""))
+  private lazy val compiled = DynamicCompiler.compileCached(source, deps)
+  private lazy val entry: E = DynamicCompiler.withContextLoader(compiled.loader)(
+    resolve(compiled.loadObject(objectName)))
 
-  /** deployCompile analogue (ScalaSparkCompute.java:74-78): compile and
-    * signature-check early unless disabled or the code carries macros.
+  /** deployCompile analogue (ScalaSparkCompute.java:74-78): compile,
+    * load and shape-check early unless disabled or the stage still
+    * carries macros (checked once run() has resolved them).
     */
   override def validate(): Seq[String] =
     if (spec.properties.get("deployCompile").contains("false")
-      || PipelineSpec.hasMacro(code)) Nil
-    else try { compileAndResolve(); Nil }
+      || spec.properties.values.exists(PipelineSpec.hasMacro)) Nil
+    else try { entry; Nil }
     catch {
       case e: DynamicCompiler.CompileException => e.errors
       case e: IllegalArgumentException => Seq(e.getMessage)
+      case _: ClassNotFoundException => Seq(s"object '$objectName' not found in scalaCode")
+      case e: NoSuchElementException => Seq(s"missing required property: ${e.getMessage}")
     }
 
-  private def compileAndResolve(): DynamicCompiler.UserFunction = {
-    val objectName = DynamicCompiler.classNameFor(name, code)
-    val compiled = DynamicCompiler.compileCached(
-      DynamicCompiler.wrap(objectName, code), extraClasspath = deps)
-    DynamicCompiler.resolveFunction(compiled.loadObject(objectName), methodName, isVoid = false)
-  }
-
-  def transform(ctx: PipelineContext, inputs: Seq[DataFrame]): DataFrame = {
-    val objectName = DynamicCompiler.classNameFor(name, code)
-    val compiled = DynamicCompiler.compileCached(
-      DynamicCompiler.wrap(objectName, code), extraClasspath = deps)
+  /** Ships the compiled jar and the dependency jars to executors, then
+    * applies `f` to the entry under the compiled classloader.
+    */
+  protected def invoke[T](ctx: PipelineContext)(f: E => T): T = {
     deps.filter(_.toString.endsWith(".jar"))
       .foreach(j => ctx.spark.sparkContext.addJar(j.toUri.toString))
     compiled.shipTo(ctx.spark)
-    val fn = DynamicCompiler.resolveFunction(
-      compiled.loadObject(objectName), methodName, isVoid = false)
-    val declared = spec.properties.get("outputSchema").map(SchemaJson.parse)
-    val prevCl = Thread.currentThread().getContextClassLoader
-    Thread.currentThread().setContextClassLoader(compiled.loader)
-    try fn.invoke(inputs.head, ctx.graftContext, declared).asInstanceOf[DataFrame]
-    finally Thread.currentThread().setContextClassLoader(prevCl)
+    DynamicCompiler.withContextLoader(compiled.loader)(f(entry))
   }
 }
 
-final class DynamicSink(val spec: StageSpec) extends SinkStage {
-  private val methodName = spec.properties.getOrElse("methodName", "sink")
-  def write(ctx: PipelineContext, input: DataFrame): Unit = {
-    val objectName = DynamicCompiler.classNameFor(name, spec.properties("scalaCode"))
-    val compiled = DynamicCompiler.compileCached(
-      DynamicCompiler.wrap(objectName, spec.properties("scalaCode")))
-    compiled.shipTo(ctx.spark)
-    val fn = DynamicCompiler.resolveFunction(
-      compiled.loadObject(objectName), methodName, isVoid = true)
-    val prevCl = Thread.currentThread().getContextClassLoader
-    Thread.currentThread().setContextClassLoader(compiled.loader)
-    try fn.invoke(input, ctx.graftContext)
-    finally Thread.currentThread().setContextClassLoader(prevCl)
+final class DynamicCompute(val spec: StageSpec)
+    extends ComputeStage with DynamicStage[DynamicCompiler.UserFunction] {
+  protected def resolve(obj: AnyRef): DynamicCompiler.UserFunction =
+    DynamicCompiler.resolveFunction(obj,
+      spec.properties.getOrElse("methodName", "transform"), isVoid = false)
+
+  def transform(ctx: PipelineContext, inputs: Seq[DataFrame]): DataFrame = {
+    val declared = spec.properties.get("outputSchema").map(SchemaJson.parse)
+    invoke(ctx)(_.invoke(inputs.head, ctx.graftContext, declared).asInstanceOf[DataFrame])
   }
+}
+
+final class DynamicSink(val spec: StageSpec)
+    extends SinkStage with DynamicStage[DynamicCompiler.UserFunction] {
+  protected def resolve(obj: AnyRef): DynamicCompiler.UserFunction =
+    DynamicCompiler.resolveFunction(obj,
+      spec.properties.getOrElse("methodName", "sink"), isVoid = true)
+
+  def write(ctx: PipelineContext, input: DataFrame): Unit =
+    invoke(ctx)(_.invoke(input, ctx.graftContext))
 }
 
 /** PySpark program stage — the reference's fourth plugin entry point
@@ -528,8 +541,8 @@ final class PySparkProgram(val spec: StageSpec) extends ComputeStage {
         // pythonCode and pyFiles) — the checks run once run() resolves
         // strictly
         graft.dynamic.PySparkRunner.validatePyFiles(
-          pyFiles.filterNot(_.contains("${"))) ++
-          (if (code.contains("${")) Nil
+          pyFiles.filterNot(PipelineSpec.hasMacro)) ++
+          (if (PipelineSpec.hasMacro(code)) Nil
            else graft.dynamic.PySparkRunner.syntaxCheck(code))
     }
   }
@@ -550,15 +563,18 @@ final class PySparkProgram(val spec: StageSpec) extends ComputeStage {
 }
 
 /** Whole-program action stage (reference ScalaSparkProgram as a DAG
-  * node): compiles full user source and dispatches by the three
-  * shapes. Ignores its (optional) input — programs drive their own IO.
+  * node): `scalaCode` is a complete source, `mainClass` the object
+  * dispatched by the three shapes. Ignores its (optional) input —
+  * programs drive their own IO.
   */
-final class DynamicProgram(val spec: StageSpec) extends ComputeStage {
+final class DynamicProgram(val spec: StageSpec)
+    extends ComputeStage with DynamicStage[AnyRef] {
+  override protected def objectName: String = spec.properties("mainClass")
+  override protected def source: String = code
+  protected def resolve(obj: AnyRef): AnyRef = obj
+
   def transform(ctx: PipelineContext, inputs: Seq[DataFrame]): DataFrame = {
-    val compiled = DynamicCompiler.compileCached(spec.properties("scalaCode"))
-    compiled.shipTo(ctx.spark)
-    DynamicCompiler.runProgram(compiled.loadObject(spec.properties("mainClass")),
-      ctx.spark, ctx.runtimeArgs)
+    invoke(ctx)(DynamicCompiler.runProgram(_, ctx.spark, ctx.runtimeArgs))
     inputs.headOption.getOrElse(ctx.spark.emptyDataFrame)
   }
 }
@@ -603,18 +619,15 @@ final class WindowAggCompute(val spec: StageSpec) extends ComputeStage {
 final class StreamSink(val spec: StageSpec) extends SinkStage {
   def write(ctx: PipelineContext, input: DataFrame): Unit = {
     val p = spec.properties
+    val mode = p.getOrElse("outputMode", "append")
     p.getOrElse("format", "memory") match {
       case "memory" =>
-        graft.streaming.StreamStages.runToMemory(input, p("queryName"),
-          p.getOrElse("outputMode", "append"))
+        graft.streaming.StreamStages.runToMemory(input, p("queryName"), mode)
       case f =>
-        val q = input.writeStream.format(f)
+        graft.streaming.StreamStages.drain(input.writeStream.format(f)
           .option("path", p("path"))
           .option("checkpointLocation", p("checkpoint"))
-          .outputMode(p.getOrElse("outputMode", "append"))
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
+          .outputMode(mode))
     }
   }
 }

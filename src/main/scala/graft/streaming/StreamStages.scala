@@ -4,7 +4,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import graft.schema.SchemaJson
 
 /** Emitted by [[StreamStages.statefulSessions]]: one closed session. */
@@ -302,11 +302,17 @@ object StreamStages {
     * concurrently must suffix the name themselves.
     */
   def runToMemory(df: DataFrame, queryName: String,
-      outputMode: String = "append"): StreamingQuery = {
-    val q = df.writeStream.format("memory")
-      .queryName(queryName).outputMode(outputMode)
-      .trigger(Trigger.AvailableNow())
-      .start()
+      outputMode: String = "append"): StreamingQuery =
+    drain(df.writeStream.format("memory")
+      .queryName(queryName).outputMode(outputMode))
+
+  /** Runs `w` over everything currently available (AvailableNow) and
+    * blocks until it has: the returned query is already drained, and
+    * its final micro-batch plan is in [[capturedPlans]]. Callers must
+    * not re-await it.
+    */
+  private[graft] def drain(w: DataStreamWriter[_]): StreamingQuery = {
+    val q = w.trigger(Trigger.AvailableNow()).start()
     q.awaitTermination()
     capturePlan(q)
     q
@@ -352,7 +358,7 @@ object StreamStages {
       orderCols: Seq[String], baseDir: String): StreamingQuery = {
     import org.apache.spark.sql.expressions.Window
     def versionDirs(): Seq[(Long, java.io.File)] = committedVersions(baseDir)
-    val q = src.writeStream.foreachBatch { (batch: DataFrame, id: Long) =>
+    drain(src.writeStream.foreachBatch { (batch: DataFrame, id: Long) =>
       val spark = batch.sparkSession
       // a replayed batch must merge against the snapshot BEFORE it
       val prev = versionDirs().filter(_._1 < id).lastOption
@@ -381,12 +387,7 @@ object StreamStages {
         .parquet(s"$baseDir/v$id")
       ()
     }
-      .option("checkpointLocation", s"$baseDir/_ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    capturePlan(q)
-    q
+      .option("checkpointLocation", s"$baseDir/_ckpt"))
   }
 
   /** Latest COMMITTED snapshot written by [[foreachBatchUpsert]] — a
@@ -399,20 +400,11 @@ object StreamStages {
   }
 
   /** Production-shaped sink: parquet files + checkpoint dir (the
-    * at-least-once restart contract).
+    * at-least-once restart contract). Blocks until drained ([[drain]]).
     */
-  def toParquet(df: DataFrame, path: String, checkpoint: String): StreamingQuery = {
-    val q = df.writeStream.format("parquet")
+  def toParquet(df: DataFrame, path: String, checkpoint: String): StreamingQuery =
+    drain(df.writeStream.format("parquet")
       .option("path", path)
       .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    // BLOCKING contract (since r12): plan capture is only meaningful
-    // once the final batch ran, so this awaits termination itself —
-    // callers must not re-await (the returned query is already drained)
-    q.awaitTermination()
-    capturePlan(q)
-    q
-  }
+      .outputMode("append"))
 }

@@ -252,6 +252,85 @@ class DynamicSpec extends SparkSpec {
     assert(local == Seq(helper.jar))
   }
 
+  test("scalaSink stage through Pipeline: the deploy check rejects a non-Unit sink, run writes its rows") {
+    import graft.pipeline.{Connection, Pipeline, PipelineSpec, StageSpec}
+    val dir = Files.createTempDirectory("graft-pipe-sink").resolve("out")
+    def spec(body: String) = PipelineSpec(Seq(
+      StageSpec("src", "range", Map("end" -> "6")),
+      StageSpec("snk", "scalaSink", Map("scalaCode" -> body))),
+      Seq(Connection("src", "snk")))
+    val bad = spec("def sink(df: DataFrame): DataFrame = df")
+    val errs = new Pipeline(bad).validate()
+    assert(errs.exists(e => e.startsWith("stage 'snk'") && e.contains("must return Unit")),
+      errs.mkString("; "))
+    val e = intercept[IllegalStateException](new Pipeline(bad).run(spark))
+    assert(e.getMessage.contains("must return Unit"))
+    val good = spec(
+      s"""def sink(df: DataFrame, ctx: GraftContext): Unit =
+         |  df.write.parquet("$dir")
+         |""".stripMargin)
+    assert(new Pipeline(good).validate().isEmpty)
+    new Pipeline(good).run(spark)
+    assert(spark.read.parquet(dir.toString).count() == 6)
+  }
+
+  test("scalaProgram stage compiles against its dependencies jar and is deploy-checked") {
+    import graft.pipeline.{Pipeline, PipelineSpec, StageSpec}
+    val helper = DynamicCompiler.compile("object ProgDepConst { val N = 6 }")
+    val out = Files.createTempDirectory("graft-prog-dep").resolve("out")
+    val code =
+      s"""import graft.dynamic.{GraftContext, GraftMain}
+         |object ProgDep extends GraftMain {
+         |  def run(ctx: GraftContext): Unit =
+         |    ctx.spark.range(ProgDepConst.N).toDF("i").write.parquet("$out")
+         |}
+         |""".stripMargin
+    def spec(mainClass: String) = PipelineSpec(Seq(StageSpec("p", "scalaProgram", Map(
+      "mainClass" -> mainClass, "scalaCode" -> code,
+      "dependencies" -> helper.jar.toString))), Nil)
+    assert(new Pipeline(spec("ProgDep")).validate().isEmpty)
+    new Pipeline(spec("ProgDep")).run(spark)
+    assert(spark.read.parquet(out.toString).count() == 6)
+    val errs = new Pipeline(spec("NoSuchProg")).validate()
+    assert(errs.exists(_.contains("'NoSuchProg' not found")), errs.mkString("; "))
+    val noMain = spec("ProgDep").stages.map(st => st.copy(properties = st.properties - "mainClass"))
+    val missing = new Pipeline(PipelineSpec(noMain, Nil)).validate()
+    assert(missing.exists(_.contains("missing required property")), missing.mkString("; "))
+  }
+
+  test("file:// dependency: fetched and compiled once per process, a repeat run ships nothing new") {
+    import graft.pipeline.{Connection, MemorySink, Pipeline, PipelineSpec, StageSpec}
+    val helper = DynamicCompiler.compile("object FileDepConst { val N = 3 }")
+    val uri = helper.jar.toUri.toString
+    val spec = PipelineSpec(Seq(
+      StageSpec("src", "range", Map("end" -> "10")),
+      StageSpec("c", "scalaCompute", Map(
+        "scalaCode" -> "def transform(df: DataFrame): DataFrame = df.limit(FileDepConst.N)",
+        "dependencies" -> uri)),
+      StageSpec("out", "memorySink", Map("key" -> "filedep"))),
+      Seq(Connection("src", "c"), Connection("c", "out")))
+    def newJars(body: => Unit): Set[String] = {
+      val before = spark.sparkContext.listJars().toSet
+      body
+      spark.sparkContext.listJars().toSet -- before
+    }
+    val first = newJars(new Pipeline(spec).run(spark))
+    assert(MemorySink.results("filedep").size == 3)
+    val compiledJars = first.map(_.split('/').last) - helper.jar.getFileName.toString
+    assert(compiledJars.size <= 1, first.mkString(", "))
+    val second = newJars {
+      assert(new Pipeline(spec).validate().isEmpty)
+      new Pipeline(spec).run(spark)
+    }
+    assert(second.isEmpty, second.mkString(", "))
+    // an unchanged jar keeps its local copy; a rewritten one is fetched again
+    val local = DynamicCompiler.expandDependencies(uri)
+    assert(DynamicCompiler.expandDependencies(uri) == local)
+    assert(helper.jar.toFile.setLastModified(helper.jar.toFile.lastModified() + 60000))
+    val refetched = DynamicCompiler.expandDependencies(uri)
+    assert(refetched != local && Files.exists(refetched.head))
+  }
+
   test("closure serialization incl. nested arrays (testScalaSparkProgramClosure)") {
     val src =
       s"""import org.apache.spark.sql._
