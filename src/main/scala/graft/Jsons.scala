@@ -1,7 +1,7 @@
 package graft
 
 /** Shared hand-rolled JSON rendering for the artifact writers
-  * (Verify, ClusterVerify, FaultVerify, ScaleStream, ScaleAniso).
+  * (Verify, ClusterVerify, FaultVerify, ScaleStream).
   * One copy so an escaping or locale fix cannot silently diverge
   * between artifacts (the r11 advice round found the locale bug had
   * to be patched in two places; by r12 there were four copies).

@@ -1,16 +1,17 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+  SparkListenerStageCompleted}
 
 import scala.collection.mutable.ArrayBuffer
 
 /** Stage-level profiler for one or more declared queries (guide §1:
   * measure first). Runs each query through the noop sink exactly like
   * Bench (same session shape), warm-up rep + measured rep, and prints
-  * per-stage wall/CPU/shuffle metrics sorted by task time — the
-  * offline stand-in for the Spark UI stage table (the bench runs with
-  * the UI disabled). Diagnostic tool only: not part of any gate or
-  * bench artifact.
+  * the measured rep's Spark job count and per-stage wall/CPU/shuffle
+  * metrics sorted by task time — the offline stand-in for the Spark UI
+  * job and stage tables (the bench runs with the UI disabled).
+  * Diagnostic tool only: not part of any gate or bench artifact.
   *
   * Usage: runMain graft.Profile <sfDir> <name>[,<name>…]
   */
@@ -36,7 +37,10 @@ object Profile {
     // flips back to false (dropped rows) or warm-up events after it
     // flips true (leaked rows).
     @volatile var record = false
+    @volatile var jobs = 0
     spark.sparkContext.addSparkListener(new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        if (record) jobs += 1
       override def onStageCompleted(sc: SparkListenerStageCompleted): Unit =
         if (record) {
           val si = sc.stageInfo
@@ -75,13 +79,14 @@ object Profile {
       val warm = runOnce(name) // rep 1: JIT/codegen warm-up, not reported
       drainListeners()
       stages.synchronized(stages.clear())
+      jobs = 0
       record = true
       val sec = runOnce(name)
       drainListeners()
       record = false
       val snap = stages.synchronized(stages.toVector)
       println(f"===== $name%s: ${sec}%.3f s (warm-up rep: ${warm}%.3f s), " +
-        s"${snap.size} stages =====")
+        s"$jobs jobs, ${snap.size} stages =====")
       val rows = snap.sortBy(-_.runMs).take(30)
       println(f"${"stage"}%6s ${"tasks"}%5s ${"wall_ms"}%8s ${"run_ms"}%8s " +
         f"${"cpu_ms"}%8s ${"gc_ms"}%6s ${"in_MB"}%8s ${"shR_MB"}%8s " +

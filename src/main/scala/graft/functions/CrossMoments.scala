@@ -20,8 +20,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, L
   * single-level sums term-for-term — only the per-task hash-agg key
   * space shrinks from d(d+1)/2·|labels| to one block's worth per
   * pass. Quantization (×10⁶ floor) and the loud multiplyExact /
-  * null-component contracts are OuterMoments' — graft.ScaleAniso
-  * measures where the swap pays.
+  * null-component contracts are OuterMoments'. Where the swap pays is
+  * measured in PLANS.md.
   */
 case class CrossMoments(left: Expression, right: Expression)
     extends BinaryExpression {

@@ -8,8 +8,8 @@ import org.apache.spark.sql.types.{DataType, DoubleType, IntegerType}
 
 /** Bucket index of a double against a fixed sorted array of DISTINCT
   * boundaries: the count of boundaries strictly below the value,
-  * via binary search — the band-assignment kernel for the quantile-
-  * banded RANGE window (RelationalQueries.cumulativeRangeCount).
+  * via binary search — the band assignment of
+  * `graft.operators.BandedWindow.quantileBand`.
   *
   * Replaces `size(filter(typedLit(bounds), b => b < v))`, which
   * interprets a lambda over all |bounds| elements per row (~255

@@ -744,66 +744,33 @@ object Dedup {
 
   /** SimHash near-dup PAIRING via Hamming-block pigeonhole (Manku,
     * Jain & Das Sarma, WWW'07 §3 — "detecting near-duplicates for web
-    * crawling", the production-scale companion to [[simhash]]): split
-    * the 30-bit signature into `maxHamming + 1` contiguous blocks; two
-    * signatures within Hamming distance `maxHamming` must agree
-    * EXACTLY on at least one block (pigeonhole), so the candidate set
-    * is the union of per-block equi-join buckets — never an all-pairs
-    * join. Candidates verify with one codegen'd popcount(xor).
-    * Signatures come from [[simhashShingles]] (n-gram features) — see
-    * its note on why unigram signatures have no pairing power.
-    *
-    * Scale shape: one explode (×(maxHamming+1)), one shuffle on the
-    * (block, bits) key, shuffle-hash candidate join, distinct on the
-    * verified pairs. Bucket population is bounded by block entropy;
-    * a skewed corpus (many docs sharing a 10-bit block) concentrates
-    * a key exactly like a hot LSH band — the same star-cap /
-    * diagnostics treatment ([[lshCandidates]], [[lshBucketStats]])
-    * applies; at Manku's scale the block count (and tables) grows so
-    * each block widens and buckets thin exponentially.
+    * crawling", the production-scale companion to [[simhash]]): the
+    * [[hammingPairs]] block join over the 30-bit signatures of
+    * [[simhashShingles]] (n-gram features — see its note on why
+    * unigram signatures have no pairing power). Bucket population is
+    * bounded by block entropy; a skewed corpus (many docs sharing a
+    * 10-bit block) concentrates a key exactly like a hot LSH band —
+    * the same star-cap / diagnostics treatment ([[lshCandidates]],
+    * [[lshBucketStats]]) applies; at Manku's scale the block count
+    * (and tables) grows so each block widens and buckets thin
+    * exponentially.
     */
   def simhashPairs(df: DataFrame, textCol: String, idCol: String,
-      maxHamming: Int, shingleN: Int = 3): DataFrame = {
-    val bits = 30 // simhash signature width
-    val nBlocks = maxHamming + 1
-    require(nBlocks <= bits, s"need $nBlocks non-empty blocks out of $bits bits")
-    // distribute widths as evenly as possible (each ≥ 1, covering all
-    // bits exactly once — the pigeonhole needs disjoint total cover)
-    val widths = (0 until nBlocks).map(h =>
-      bits / nBlocks + (if (h < bits % nBlocks) 1 else 0))
-    val offsets = widths.scanLeft(0)(_ + _)
-    val sig = simhashShingles(df, textCol, idCol, shingleN)
-    val blockStructs = (0 until nBlocks).map { h =>
-      struct(lit(h).as("blk"),
-        shiftright(col("simhash"), offsets(h))
-          .bitwiseAND(lit((1L << widths(h)) - 1)).as("bv"))
-    }
-    val ex = sig.select(col("doc_id"), col("simhash"),
-        explode(array(blockStructs: _*)).as("b"))
-      .select(col("doc_id"), col("simhash"),
-        col("b.blk").as("blk"), col("b.bv").as("bv"))
-    val l = ex.alias("l")
-    val r = ex.hint("shuffle_hash").alias("r")
-    l.join(r, col("l.blk") === col("r.blk") && col("l.bv") === col("r.bv") &&
-        col("l.doc_id") < col("r.doc_id"))
-      .select(col("l.doc_id").as("ia"), col("r.doc_id").as("ib"),
-        bit_count(col("l.simhash").bitwiseXOR(col("r.simhash")))
-          .cast("int").as("hamming"))
-      .filter(col("hamming") <= maxHamming)
-      .distinct() // a close pair can agree on several blocks
-  }
+      maxHamming: Int, shingleN: Int = 3): DataFrame =
+    hammingPairs(simhashShingles(df, textCol, idCol, shingleN), "doc_id",
+      "simhash", bits = 30, maxHamming)
 
-  /** Generic Hamming-distance pairing of precomputed fixed-width
-    * signatures — the [[simhashPairs]] pigeonhole (Manku WWW'07 §3)
-    * lifted to ANY signature column (perceptual image hashes, audio
-    * fingerprints, 64-bit SimHash variants): split the `bits`-wide
-    * signature into `maxHamming + 1` contiguous blocks, equi-join on
-    * exact block agreement (two signatures within the distance bound
-    * must agree on ≥ 1 block), verify with one codegen'd
-    * popcount(xor), distinct. Same scale shape as [[simhashPairs]]:
-    * one ×(maxHamming+1) explode, one shuffle on the (block, bits)
-    * key, shuffle-hash join, never all-pairs. Input `sig` must carry
-    * one row per id.
+  /** Hamming-distance pairing of precomputed fixed-width signatures
+    * via the pigeonhole (Manku WWW'07 §3), for ANY signature column
+    * (SimHash, perceptual image hashes, audio fingerprints): split the
+    * `bits`-wide signature into `maxHamming + 1` contiguous blocks
+    * (widths as even as possible, each ≥ 1, covering every bit once),
+    * equi-join on exact block agreement (two signatures within the
+    * distance bound must agree on ≥ 1 block), verify with one
+    * codegen'd popcount(xor), distinct (a close pair can agree on
+    * several blocks). Scale shape: one ×(maxHamming+1) explode, one
+    * shuffle on the (block, bits) key, shuffle-hash join, never
+    * all-pairs. Input `sig` must carry one row per id.
     */
   def hammingPairs(sig: DataFrame, idCol: String, hashCol: String,
       bits: Int, maxHamming: Int): DataFrame = {

@@ -451,7 +451,8 @@ object Similarity {
     // localCheckpoint: every subspace fit needs (init collect + one
     // stats aggregation per iteration) over the normalized corpus —
     // 2·nSub actions whose lineage would otherwise re-scan parquet and
-    // re-normalize each time (the qualityBuckets discipline; persist()
+    // re-normalize each time (the lineage cut TextAnalysis.nllRunningSum
+    // makes before its BandedWindow actions; persist()
     // would break columnar codegen instead — see PLANS.md)
     val normed = corpus
       .withColumn("nn0", l2Norm(col("embedding")))
@@ -556,7 +557,7 @@ object Similarity {
     // table (anti-join) AND the cumulative picked set (twice) — without
     // a lineage cut each step re-runs the whole candidate-generation
     // chain, multiplying the brute-force scan k× (measured 4.6 s → the
-    // checkpointed form below; the qualityBuckets discipline)
+    // checkpointed form below; the TextAnalysis.nllRunningSum cut)
     val cands = bruteForceTopK(queries, corpus, nCand)
       .join(vecs, "n_vec_id")
       .select(col("q_vec_id"), col("n_vec_id"), col("cos").as("rel"),
@@ -969,7 +970,7 @@ object Similarity {
     * layout AFTER aggregation, on metadata-scale rows), so everything
     * downstream and the oracle are unchanged. The swap pays only once
     * d²·|labels| partial-agg keys outgrow the executor hash-agg
-    * budget — measured with graft.ScaleAniso (numbers in PLANS.md);
+    * budget — the measurement is in PLANS.md;
     * at d=64 (SchemaPinSpec) the single level is scan-bound.
     *
     * Null contract: a null vector or null component fails the job

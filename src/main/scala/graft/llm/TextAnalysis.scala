@@ -395,52 +395,22 @@ object TextAnalysis {
     * via an explicit sentinel key (a filter stage must decide on them
     * explicitly, same contract as [[unigramLogProb]]).
     *
-    * The global ntile is computed WITHOUT a global window (a naive
-    * `Window.orderBy` funnels the corpus through one task): approx-
-    * quantile bands over the mean-NLL key (skew-proof — a hot value
-    * gets its own band), per-band start offsets from a ≤nBands-row
-    * collected aggregate (metadata-scale, the `cumulativeRangeCount`
-    * machinery), exact global rank = band offset + within-band
-    * row_number, and the tier from the rank by ntile's own
-    * arithmetic: the first n%k tiers take ⌊n/k⌋+1 rows, the rest
-    * ⌊n/k⌋. Ties on band boundaries can't straddle bands (strict-<
-    * banding), and the (mean, doc_id) order key is total, so the
-    * result is bit-identical to the single-window form.
+    * The exact global rank comes from [[nllRunningSum]] (no global
+    * window), and the tier from the rank by ntile's own arithmetic:
+    * the first n%k tiers take ⌊n/k⌋+1 rows, the rest ⌊n/k⌋. The
+    * (mean, doc_id) order is total, so the result is bit-identical to
+    * the single-window form.
     */
   def qualityBuckets(df: DataFrame, textCol: String, idCol: String,
-      buckets: Int = 3, nBands: Int = 256): DataFrame = {
-    import graft.operators.RelationalQueries.{quantileBandBounds, bandOf}
-    val sentinel = 8000000000000000000L // far above any real mean NLL
-    // localCheckpoint: the scored table is doc-scale (one row per doc)
-    // but its lineage is the whole 3-shuffle NLL chain, and the banding
-    // needs THREE actions over it (approxQuantile bounds, the offsets
-    // collect, the final job) — materialize once instead of re-running
-    // the chain per action (A/B at sf0.1: 2.9 s → 1.2 s).
-    val per = unigramLogProb(df, textCol, idCol)
-      .withColumn("mean_nll_micro",
-        when(col("n_tokens") > 0, expr("nll_micro_sum div n_tokens"))
-          .otherwise(lit(sentinel)))
-      .localCheckpoint()
-    val bounds = quantileBandBounds(per, "mean_nll_micro", nBands)
-    val banded = per.withColumn("band", bandOf(bounds, col("mean_nll_micro")))
-    val cnts = banded.groupBy("band").agg(count(lit(1)).as("c")).collect()
-      .map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1)
-    var acc = 0L
-    val offsets = cnts.map { case (b, c) => val o = acc; acc += c; (b, o) }.toSeq
-    val n = acc
-    val offDf = per.sparkSession.createDataFrame(offsets).toDF("band", "off")
-    val wIn = Window.partitionBy("band").orderBy("mean_nll_micro", "doc_id")
-    val q = n / buckets
-    val r = n % buckets
-    banded.join(broadcast(offDf), "band")
-      .withColumn("nll_rank", col("off") + row_number().over(wIn))
-      .withColumn("quality_bucket",
-        expr(s"CAST(IF(nll_rank <= ${r * (q + 1)}, " +
-          s"(nll_rank - 1) div ${q + 1} + 1, " +
-          s"$r + (nll_rank - ${r * (q + 1)} - 1) div ${math.max(q, 1L)} + 1) AS INT)"))
+      buckets: Int = 3, nBands: Int = 256): DataFrame =
+    nllRunningSum(df, textCol, idCol, nBands, lit(1), "nll_rank", "n")
+      .withColumn("q", expr(s"n div $buckets"))
+      .withColumn("r", expr(s"n % $buckets"))
+      .withColumn("quality_bucket", expr("CAST(IF(nll_rank <= r * (q + 1), " +
+        "(nll_rank - 1) div (q + 1) + 1, " +
+        "r + (nll_rank - r * (q + 1) - 1) div greatest(q, 1) + 1) AS INT)"))
       .select("doc_id", "n_tokens", "mean_nll_micro", "nll_rank",
         "quality_bucket")
-  }
 
   /** Token-budget corpus selection (the data-mixing step after
     * scoring): walk documents from best to worst quality (mean unigram
@@ -448,42 +418,43 @@ object TextAnalysis {
     * and select whole documents until the running token total passes
     * `budgetTokens`. The standard "take the best N-billion tokens"
     * curation op; emits every doc with its exact global running total
-    * and a selected flag so the caller can also inspect the cut line.
-    *
-    * The global prefix-sum uses the same no-global-window machinery as
-    * [[qualityBuckets]]: quantile bands over the quality key, per-band
-    * token-mass offsets from a ≤nBands-row collected aggregate, and a
-    * RANGE-free ROWS cumsum window partitioned by band. Strict-<
-    * banding means ties never straddle bands, so band offset +
-    * within-band running sum is bit-identical to the single-window
-    * prefix sum.
+    * (from [[nllRunningSum]]) and a selected flag so the caller can
+    * also inspect the cut line.
     */
   def budgetSelect(df: DataFrame, textCol: String, idCol: String,
-      budgetTokens: Long, nBands: Int = 256): DataFrame = {
-    import graft.operators.RelationalQueries.{quantileBandBounds, bandOf}
-    val sentinel = 8000000000000000000L // token-less docs rank last
-    // same localCheckpoint rationale as qualityBuckets: three actions
-    // over a doc-scale table with a 3-shuffle lineage
-    val per = unigramLogProb(df, textCol, idCol)
-      .withColumn("mean_nll_micro",
-        when(col("n_tokens") > 0, expr("nll_micro_sum div n_tokens"))
-          .otherwise(lit(sentinel)))
-      .localCheckpoint()
-    val bounds = quantileBandBounds(per, "mean_nll_micro", nBands)
-    val banded = per.withColumn("band", bandOf(bounds, col("mean_nll_micro")))
-    // per-band token mass — metadata-scale (≤ nBands rows)
-    val bandTok = banded.groupBy("band").agg(sum("n_tokens").as("t")).collect()
-      .map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1)
-    var acc = 0L
-    val offsets = bandTok.map { case (b, t) => val o = acc; acc += t; (b, o) }.toSeq
-    val offDf = per.sparkSession.createDataFrame(offsets).toDF("band", "tok_off")
-    val wIn = Window.partitionBy("band")
-      .orderBy("mean_nll_micro", "doc_id")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    banded.join(broadcast(offDf), "band")
-      .withColumn("cum_tokens", col("tok_off") + sum("n_tokens").over(wIn))
+      budgetTokens: Long, nBands: Int = 256): DataFrame =
+    nllRunningSum(df, textCol, idCol, nBands, col("n_tokens"), "cum_tokens", "n")
       .withColumn("selected", (col("cum_tokens") <= budgetTokens).cast("int"))
       .select("doc_id", "n_tokens", "mean_nll_micro", "cum_tokens", "selected")
+
+  /** Every document's `n_tokens` and mean unigram NLL
+    * (`mean_nll_micro`; token-less documents get a sentinel far above
+    * any real mean, so they rank last), with the domain as `domain`
+    * when `domainCol` is given, plus the exact running `sum(value)`
+    * over the (mean NLL, doc_id) order — per domain if given — as
+    * `running` and its total as `total` ([[BandedWindow]] over
+    * quantile bands of the mean NLL).
+    *
+    * The scored table is localCheckpoint'ed: it is doc-scale (one row
+    * per doc) but its lineage is the whole 3-shuffle NLL chain, and
+    * the banding needs three actions over it (the quantile bounds, the
+    * band totals, the final job) — materialize once instead of
+    * re-running the chain per action (A/B at sf0.1: 2.9 s → 1.2 s).
+    */
+  private def nllRunningSum(df: DataFrame, textCol: String, idCol: String,
+      nBands: Int, value: Column, running: String, total: String,
+      domainCol: Option[String] = None): DataFrame = {
+    val scored = unigramLogProb(df, textCol, idCol)
+      .withColumn("mean_nll_micro",
+        when(col("n_tokens") > 0, expr("nll_micro_sum div n_tokens"))
+          .otherwise(lit(8000000000000000000L)))
+    val per = domainCol.fold(scored)(d => scored.join(
+        df.select(col(idCol).as("doc_id"), col(d).as("domain")), "doc_id"))
+      .localCheckpoint()
+    graft.operators.BandedWindow.runningSum(per,
+      graft.operators.BandedWindow.quantileBand(per, "mean_nll_micro", nBands),
+      Seq(col("mean_nll_micro"), col("doc_id")), value, running, total,
+      domainCol.map(_ => "domain").toSeq)
   }
 
   /** Bigram upgrade of [[unigramLogProb]]: per-document conditional
@@ -1137,52 +1108,21 @@ object TextAnalysis {
     *
     * Scale shape: a naive per-domain `row_number` window puts an
     * entire domain (corpus/|domains| rows) in ONE task — the skew
-    * trap. This uses the [[qualityBuckets]] banding machinery keyed by
-    * (domain, band) instead: global quantile bands over the score,
-    * a ≤|domains|·nBands-row collected count table → per-domain band
+    * trap. [[nllRunningSum]] keys the banded rank by (domain, band)
+    * instead: global quantile bands over the score, per-domain band
     * offsets, and the rank window partitioned by (domain, band) —
-    * parallel across bands within every domain. Strict-< banding
-    * means ties never straddle bands, so band offset + within-band
-    * row_number is bit-identical to the single-window per-domain rank.
-    * The domain column joins back on doc id (one doc-scale equi-join;
-    * thread the column through the scorer if that shuffle matters).
+    * parallel across bands within every domain, bit-identical to the
+    * single-window per-domain rank. The domain column joins back on
+    * doc id (one doc-scale equi-join).
     */
   def domainQualityCut(df: DataFrame, textCol: String, idCol: String,
-      domainCol: String, keepPct: Int, nBands: Int = 256): DataFrame = {
-    import graft.operators.RelationalQueries.{quantileBandBounds, bandOf}
-    val sentinel = 8000000000000000000L // token-less docs rank last
-    // localCheckpoint: three actions over a doc-scale table with a
-    // 3-shuffle lineage (same rationale as qualityBuckets)
-    val per = unigramLogProb(df, textCol, idCol)
-      .withColumn("mean_nll_micro",
-        when(col("n_tokens") > 0, expr("nll_micro_sum div n_tokens"))
-          .otherwise(lit(sentinel)))
-      .join(df.select(col(idCol).as("doc_id"), col(domainCol).as("domain")),
-        "doc_id")
-      .localCheckpoint()
-    val bounds = quantileBandBounds(per, "mean_nll_micro", nBands)
-    val banded = per.withColumn("band", bandOf(bounds, col("mean_nll_micro")))
-    // (domain, band) counts — metadata-scale, ≤ |domains|·nBands rows
-    val cnts = banded.groupBy("domain", "band").agg(count(lit(1)).as("c"))
-      .collect().map(r => (r.getString(0), r.getInt(1), r.getLong(2)))
-    val offsets = cnts.groupBy(_._1).toSeq.flatMap { case (d, rows) =>
-      val nDomain = rows.map(_._3).sum
-      var acc = 0L
-      rows.sortBy(_._2).map { case (_, b, c) =>
-        val o = acc; acc += c; (d, b, o, nDomain)
-      }
-    }
-    val offDf = df.sparkSession.createDataFrame(offsets)
-      .toDF("domain", "band", "off", "n_domain")
-    val wIn = Window.partitionBy("domain", "band")
-      .orderBy("mean_nll_micro", "doc_id")
-    banded.join(broadcast(offDf), Seq("domain", "band"))
-      .withColumn("src_rank", col("off") + row_number().over(wIn))
+      domainCol: String, keepPct: Int, nBands: Int = 256): DataFrame =
+    nllRunningSum(df, textCol, idCol, nBands, lit(1), "src_rank", "n_domain",
+        Some(domainCol))
       .select(col("doc_id"), col("domain"), col("mean_nll_micro"),
         col("src_rank"), col("n_domain"),
         (col("src_rank") * 100 <= col("n_domain") * keepPct)
           .cast("int").as("kept"))
-  }
 
   /** Filter-cascade attrition report — the audit every cleaning
     * pipeline publishes: for each rule, in cascade order, how many

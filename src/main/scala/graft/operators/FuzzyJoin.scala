@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Edit-distance similarity join (entity resolution / record linkage)
@@ -72,29 +71,19 @@ object FuzzyJoin {
     * limited to what the sort order co-locates — the documented SNM
     * trade; multi-pass SNM re-runs with rotated keys).
     *
-    * The global sort rank is computed WITHOUT a global window (the
-    * qualityBuckets discipline): lexicographic prefix bands — a
-    * `bandChars`-char prefix of the sort key is order-consistent with
-    * the full (key, id) order, and equal keys can't straddle bands —
-    * per-band start offsets from a ≤|alphabet|^bandChars-row collected
-    * count (metadata scale), exact global rank = offset + within-band
-    * row_number. Neighbor candidates materialize as an equi-join on
-    * the rank (each row targets ranks rn+1..rn+w — one generate, w
-    * rows), so the candidate stage is a plain shuffle join: no
-    * all-pairs, no single-task global sort anywhere.
+    * The global sort rank comes from the [[BandedWindow]] kernel, with
+    * lexicographic prefix bands: a `bandChars`-char prefix of the sort
+    * key is order-consistent with the full (key, id) order, and equal
+    * keys can't straddle bands. Neighbor candidates materialize as an
+    * equi-join on the rank (each row targets ranks rn+1..rn+w — one
+    * generate, w rows), so the candidate stage is a plain shuffle
+    * join: no all-pairs, no single-task global sort anywhere.
     */
   def snmPairs(df: DataFrame, idCol: String, keyCol: String, w: Int,
       maxDist: Int, bandChars: Int = 2): DataFrame = {
     val base = df.select(col(idCol).cast("long").as("id"), col(keyCol).as("k"))
-    val banded = base.withColumn("band", substring(col("k"), 1, bandChars))
-    val cnts = banded.groupBy("band").agg(count(lit(1)).as("c"))
-      .collect().map(r => (r.getString(0), r.getLong(1))).sortBy(_._1)
-    var acc = 0L
-    val offsets = cnts.map { case (b, c) => val o = acc; acc += c; (b, o) }.toSeq
-    val offDf = df.sparkSession.createDataFrame(offsets).toDF("band", "off")
-    val win = Window.partitionBy("band").orderBy("k", "id")
-    val ranked = banded.join(broadcast(offDf), "band")
-      .withColumn("rn", col("off") + row_number().over(win))
+    val ranked = BandedWindow.runningSum(base, substring(col("k"), 1, bandChars),
+        Seq(col("k"), col("id")), lit(1), "rn", "n")
       .select("id", "k", "rn")
     val targets = ranked.select(col("id").as("a_id"), col("k").as("a_val"),
       explode(sequence(col("rn") + 1, col("rn") + lit(w.toLong))).as("rn"))

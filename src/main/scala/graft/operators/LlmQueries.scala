@@ -2221,9 +2221,9 @@ object LlmQueries {
         |ORDER BY doc_id""".stripMargin)),
 
     // ---- CCNet head/middle/tail quality bucketing: exact global
-    // ntile over mean unigram NLL, computed via quantile bands +
-    // band-offset ranks (no global window; bit-identical to the
-    // single-window form the oracle runs) ---------------------------
+    // ntile over mean unigram NLL from a BandedWindow rank (no global
+    // window; bit-identical to the single-window form the oracle
+    // runs) ---------------------------------------------------------
     QDef("quality_buckets", (s, dir) =>
       TextAnalysis.qualityBuckets(Tables.load(s, dir, "documents"),
           "text", "doc_id", buckets = 3)
@@ -2255,7 +2255,7 @@ object LlmQueries {
     // ---- token-budget corpus selection: best-quality-first running
     // token sum, whole docs selected until the budget passes — the
     // "take the best N tokens" curation step. Exact global prefix sum
-    // WITHOUT a global window (banded, like quality_buckets) ----------
+    // WITHOUT a global window (BandedWindow, like quality_buckets) -----
     QDef("budget_select", (s, dir) =>
       TextAnalysis.budgetSelect(Tables.load(s, dir, "documents"),
           "text", "doc_id", budgetTokens = 15000L)
@@ -2319,7 +2319,7 @@ object LlmQueries {
         |ORDER BY d.doc_id""".stripMargin)),
 
     // ---- per-domain adaptive quality threshold: keep each domain's
-    // best keepPct% by mean NLL — banded (domain, band) windows, no
+    // best keepPct% by mean NLL — BandedWindow (domain, band) windows, no
     // whole-domain single-task window; oracle = the naive per-domain
     // rank the banding must equal bit-for-bit ------------------------
     QDef("domain_quality_cut", (s, dir) =>
@@ -2947,7 +2947,7 @@ object LlmQueries {
       Some(AnisotropyOracle)),
 
     // ---- the same audit through the TWO-LEVEL subspace reduce — the
-    // d ≫ 64 swap (graft.ScaleAniso measured the threshold; PLANS.md):
+    // d ≫ 64 swap (the measured threshold is in PLANS.md):
     // d/w diagonal OuterMoments triangles + cross CrossMoments
     // rectangles, one bounded-state aggregation per block, remapped
     // and unioned into a bit-identical moments frame. Same oracle —

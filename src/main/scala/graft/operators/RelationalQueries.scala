@@ -96,54 +96,16 @@ object RelationalQueries {
     o.agg(aggs.head, aggs.tail: _*)
   }
 
-  /** Approx-quantile band boundaries for [[cumulativeRangeCount]]:
-    * `nBands-1` sketch quantiles of `valueCol`, dedup'd (heavy skew
-    * collapses repeated quantiles onto the hot value) and sorted. A
-    * one-pass GK sketch — metadata to the driver, like AQE stats.
-    */
-  private[graft] def quantileBandBounds(df: DataFrame, valueCol: String,
-      nBands: Int): Array[Double] = {
-    val probs = (1 until nBands).map(_.toDouble / nBands).toArray
-    df.stat.approxQuantile(valueCol, probs, 0.001).distinct.sorted
-  }
-
-  /** Band index of a value: the count of boundaries STRICTLY below it.
-    * Strict `<` guarantees equal keys share a band (RANGE-frame peers
-    * can never straddle a partition) and every row in a lower band is
-    * strictly below every value in a higher one — so a per-band
-    * cumulative window plus the lower-band row-count offset equals the
-    * global RANGE frame exactly, even when a boundary equals the hot
-    * value. Codegen'd binary search (functions.SortedBucket) — the
-    * HOF form (`size(filter(lit(bounds), _ < v))`) interpreted ~255
-    * lambda calls per row and measured 1.5× the whole query.
-    */
-  private[graft] def bandOf(bounds: Array[Double], v: Column): Column =
-    if (bounds.isEmpty) lit(0)
-    else graft.functions.SortedBucket(v.cast("double"), bounds)
-
   /** Global cumulative-RANGE count (`n_cheaper_or_eq` = rows with
-    * value ≤ mine) WITHOUT a global window: approx-quantile bands over
-    * `valueCol` (balanced under skew — uniform-value bands degenerate
-    * when the key mass concentrates; quantile bands put the hot value
-    * alone in its band and spread the rest), per-band start offsets
-    * from a ≤nBands-row collected aggregate (metadata-scale), then the
-    * RANGE frame runs PARTITIONED by band.
+    * value ≤ mine, nulls first as peers) on the [[BandedWindow]]
+    * kernel: approx-quantile bands over `valueCol` and a RANGE frame
+    * partitioned by band, so equal values stay peers.
     */
   private[graft] def cumulativeRangeCount(df: DataFrame, valueCol: String,
-      nBands: Int = 256): DataFrame = {
-    val bounds = quantileBandBounds(df, valueCol, nBands)
-    val banded = df.withColumn("band", bandOf(bounds, col(valueCol)))
-    val cnts = banded.groupBy("band").agg(count(lit(1)).as("c")).collect()
-      .map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1)
-    var acc = 0L
-    val offsets = cnts.map { case (b, c) => val o = acc; acc += c; (b, o) }.toSeq
-    val offDf = df.sparkSession.createDataFrame(offsets).toDF("band", "off")
-    val wIn = Window.partitionBy("band").orderBy(col(valueCol))
-      .rangeBetween(Window.unboundedPreceding, Window.currentRow)
-    banded.join(broadcast(offDf), "band")
-      .withColumn("n_cheaper_or_eq", col("off") + count(lit(1)).over(wIn))
-      .drop("band", "off")
-  }
+      nBands: Int = 256): DataFrame =
+    BandedWindow.runningSum(df, BandedWindow.quantileBand(df, valueCol, nBands),
+        Seq(col(valueCol)), lit(1), "n_cheaper_or_eq", "__n")
+      .drop("__n")
 
   /** session_paths' per-session path cap: first PathCap events + a
     * '...' marker. Shared between the engine call and the oracle SQL
@@ -473,15 +435,13 @@ object RelationalQueries {
     // ---- RANGE frame: cumulative including peers — deterministic
     // under ties by construction. A naive global `Window.orderBy`
     // funnels the whole table through ONE partition (WindowExec
-    // warns); instead approx-QUANTILE bands over the order key (skew-
-    // proof: a hot value gets its own band, the rest stay balanced —
-    // the round-5 value-uniform bands degraded when the key mass
-    // concentrated), per-band start offsets from a ≤256-row collected
-    // aggregate (metadata-scale, like AQE stats), and the cumulative
-    // RANGE frame runs PARTITIONED by band. Equal keys share a band,
-    // so no frame ever spans bands — identical semantics, parallel
-    // window. See cumulativeRangeCount; skew balance is asserted in
-    // RelationalSpec.
+    // warns); instead the BandedWindow kernel over approx-QUANTILE
+    // bands of the order key (skew-proof: a hot value gets its own
+    // band, the rest stay balanced — the round-5 value-uniform bands
+    // degraded when the key mass concentrated). Equal keys share a
+    // band, so no frame ever spans bands — identical semantics,
+    // parallel window. See cumulativeRangeCount; skew balance is
+    // asserted in RelationalSpec.
     QDef("window_range", (s, dir) =>
       cumulativeRangeCount(t(s, dir, "orders"), "o_totalprice")
         .select("o_orderkey", "o_totalprice", "n_cheaper_or_eq")
@@ -1365,7 +1325,7 @@ object RelationalQueries {
 
     // ---- sorted-neighborhood record linkage (Hernández–Stolfo
     // merge/purge): rank by blocking key WITHOUT a global window
-    // (prefix bands + collected offsets), pair ranks rn+1..rn+w via
+    // (BandedWindow over prefix bands), pair ranks rn+1..rn+w via
     // an equi-join, levenshtein verify. The oracle replays the exact
     // same window semantics with a plain global row_number ----------
     QDef("snm_pairs", (s, dir) =>

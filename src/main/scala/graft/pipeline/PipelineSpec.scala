@@ -43,15 +43,19 @@ final case class PipelineSpec(stages: Seq[StageSpec], connections: Seq[Connectio
   }
 
   /** Substitute `${key}` macros in every property value. Strict (run
-    * time) fails on an unresolved macro, like the reference does;
-    * lenient (deploy time) leaves it in place, since the reference's
-    * containsMacro gate defers the checks that depend on it.
+    * time) fails on an unresolved macro, like the reference does, and
+    * turns each `\${` escape into a literal `${`; lenient (deploy time)
+    * leaves unresolved macros and escapes in place, since the
+    * reference's containsMacro gate defers the checks that depend on a
+    * macro ([[PipelineSpec.hasMacro]] tells the two apart).
     */
   def resolveMacros(args: Map[String, String], strict: Boolean = true): PipelineSpec = {
     def subst(v: String): String = PipelineSpec.Macro.replaceAllIn(v, m =>
-      scala.util.matching.Regex.quoteReplacement(args.getOrElse(m.group(1),
-        if (strict) throw new IllegalArgumentException(s"unresolved macro $${${m.group(1)}}")
-        else m.matched)))
+      scala.util.matching.Regex.quoteReplacement(
+        if (m.group(1) == null) { if (strict) "${" else m.matched }
+        else args.getOrElse(m.group(1),
+          if (strict) throw new IllegalArgumentException(s"unresolved macro $${${m.group(1)}}")
+          else m.matched)))
     copy(stages = stages.map(s => s.copy(properties = s.properties.map {
       case (k, v) => k -> subst(v)
     })))
@@ -60,9 +64,17 @@ final case class PipelineSpec(stages: Seq[StageSpec], connections: Seq[Connectio
 
 object PipelineSpec {
 
-  private val Macro = raw"\$$\{([^}]+)\}".r
+  /** A `\${` escape (group 1 null) or a `${key}` macro. */
+  private val Macro = raw"\\\$$\{|\$$\{([^}]+)\}".r
 
-  def hasMacro(value: String): Boolean = value.contains("${")
+  /** Whether `value` holds a `${key}` macro; a `\${` escape is not one. */
+  def hasMacro(value: String): Boolean =
+    Macro.findAllMatchIn(value).exists(_.group(1) != null)
+
+  /** A leniently resolved value as strict resolution will give it:
+    * each `\${` escape becomes a literal `${`.
+    */
+  def literal(value: String): String = value.replace("\\${", "${")
 
   /** Parse the JSON wire form:
     * {"stages":[{"name":..,"type":..,"properties":{..}}],

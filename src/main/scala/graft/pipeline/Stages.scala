@@ -442,7 +442,7 @@ final class SqlCompute(val spec: StageSpec, inputNames: Seq[String]) extends Com
   */
 sealed trait DynamicStage[E] extends Stage {
   protected def resolve(obj: AnyRef): E
-  protected def code: String = spec.properties("scalaCode")
+  protected def code: String = PipelineSpec.literal(spec.properties("scalaCode"))
   protected def objectName: String = DynamicCompiler.classNameFor(name, code)
   protected def source: String = DynamicCompiler.wrap(objectName, code)
 
@@ -541,9 +541,9 @@ final class PySparkProgram(val spec: StageSpec) extends ComputeStage {
         // pythonCode and pyFiles) — the checks run once run() resolves
         // strictly
         graft.dynamic.PySparkRunner.validatePyFiles(
-          pyFiles.filterNot(PipelineSpec.hasMacro)) ++
+          pyFiles.filterNot(PipelineSpec.hasMacro).map(PipelineSpec.literal)) ++
           (if (PipelineSpec.hasMacro(code)) Nil
-           else graft.dynamic.PySparkRunner.syntaxCheck(code))
+           else graft.dynamic.PySparkRunner.syntaxCheck(PipelineSpec.literal(code)))
     }
   }
 

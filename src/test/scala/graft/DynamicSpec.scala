@@ -331,6 +331,32 @@ class DynamicSpec extends SparkSpec {
     assert(refetched != local && Files.exists(refetched.head))
   }
 
+  test("scalaCode: an escaped \\${ is a literal ${, so a Scala interpolation deploy-checks and runs") {
+    import graft.pipeline.{Connection, MemorySink, Pipeline, PipelineSpec, StageSpec}
+    def spec(body: String) = PipelineSpec(Seq(
+      StageSpec("src", "range", Map("end" -> "2")),
+      StageSpec("c", "scalaCompute", Map("scalaCode" -> body)),
+      StageSpec("out", "memorySink", Map("key" -> "escape"))),
+      Seq(Connection("src", "c"), Connection("c", "out")))
+    // `\${n}` is Scala interpolation; `${suffix}` stays a pipeline macro
+    val good = spec("""def transform(df: DataFrame): DataFrame = {
+                      |  val n = 7
+                      |  df.select(lit(s"v\${n}-${suffix}").as("tag"))
+                      |}""".stripMargin)
+    val args = Map("suffix" -> "x")
+    assert(new Pipeline(good).validate(args).isEmpty)
+    // the deploy check compiles the interpolating body: an undefined
+    // name in it is reported before run
+    val bad = spec("""def transform(df: DataFrame): DataFrame =
+                     |  df.select(lit(s"v\${undefinedName}").as("tag"))""".stripMargin)
+    val errs = new Pipeline(bad).validate(args)
+    assert(errs.exists(_.contains("undefinedName")), errs.mkString("; "))
+    // an unresolved macro still defers the deploy check
+    assert(new Pipeline(good).validate().isEmpty)
+    new Pipeline(good).run(spark, args)
+    assert(MemorySink.results("escape").map(_.getString(0)) == Seq("v7-x", "v7-x"))
+  }
+
   test("closure serialization incl. nested arrays (testScalaSparkProgramClosure)") {
     val src =
       s"""import org.apache.spark.sql._

@@ -180,6 +180,26 @@ class RelationalSpec extends SparkSpec {
       .snmPairs(rows, "id", "name", w = 2, maxDist = 1)
       .select("a_id", "b_id").as[(Long, Long)].collect().toSet
     assert(tight == Set((10L, 11L), (10L, 12L)), s"got $tight")
+    // against a single-task global row_number SNM: a null key sorts
+    // first, and keys outside the BMP sort by UTF-8 bytes ("～" U+FF5E
+    // before "😀" U+1F600, the reverse of UTF-16 order)
+    def globalSnm(df: org.apache.spark.sql.DataFrame, w: Int, maxDist: Int) = {
+      val r = df.withColumn("rn", row_number().over(
+        org.apache.spark.sql.expressions.Window.orderBy("name", "id")))
+      r.as("a").join(r.as("b"), $"b.rn" > $"a.rn" && $"b.rn" <= $"a.rn" + w)
+        .select($"a.id", $"b.id", levenshtein($"a.name", $"b.name").as("dist"))
+        .filter(col("dist") <= maxDist)
+        .as[(Long, Long, Int)].collect().toSet
+    }
+    val withNull = rows.union(Seq(15L -> (null: String)).toDF("id", "name"))
+    val unicode = Seq(1L -> "～a", 2L -> "😀b", 3L -> "😀c").toDF("id", "name")
+    for ((df, w) <- Seq(withNull -> 2, unicode -> 1, unicode.union(withNull) -> 2)) {
+      val banded = graft.operators.FuzzyJoin.snmPairs(df, "id", "name", w, maxDist = 3)
+        .select("a_id", "b_id", "dist").as[(Long, Long, Int)].collect().toSet
+      assert(banded == globalSnm(df, w, 3), s"w=$w")
+    }
+    assert(graft.operators.FuzzyJoin.snmPairs(unicode, "id", "name", w = 1, maxDist = 3)
+      .select("a_id", "b_id").as[(Long, Long)].collect().toSet == Set((1L, 2L), (2L, 3L)))
   }
 
   test("approx_count_distinct stays within HLL error of exact") {
@@ -237,18 +257,25 @@ class RelationalSpec extends SparkSpec {
     import graft.operators.RelationalQueries
     // 90% of the mass on ONE key value — the regime that degenerated
     // round-5's value-uniform bands into a single partition.
+    // Plus a null value: Spark's global window orders it first, as a
+    // peer of every other null.
     val hot = 9000
-    val rows = (0 until hot).map(i => (i.toLong, 100.0)) ++
-      (0 until 1000).map(i => (hot + i.toLong, i.toDouble * 7.3 + 1))
+    val rows = (0 until hot).map(i => (i.toLong, Option(100.0))) ++
+      (0 until 1000).map(i => (hot + i.toLong, Option(i.toDouble * 7.3 + 1))) :+
+      ((hot + 1000).toLong, Option.empty[Double])
     val df = rows.toDF("id", "v").repartition(8)
 
     val got = RelationalQueries.cumulativeRangeCount(df, "v")
       .select("id", "n_cheaper_or_eq").collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    // oracle: brute-force count of values <= mine
+    // oracle: the single-task global RANGE window
+    import org.apache.spark.sql.expressions.Window
+    val want = df.select(col("id"), count(lit(1)).over(Window.orderBy("v")
+        .rangeBetween(Window.unboundedPreceding, Window.currentRow)))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(want.size == rows.size && want((hot + 1000).toLong) == 1L)
     rows.foreach { case (id, v) =>
-      val expect = rows.count(_._2 <= v).toLong
-      assert(got(id) == expect, s"id=$id v=$v got=${got(id)} want=$expect")
+      assert(got(id) == want(id), s"id=$id v=$v got=${got(id)} want=${want(id)}")
     }
 
     // band balance: the hot value's band is irreducible (RANGE peers
@@ -259,8 +286,8 @@ class RelationalSpec extends SparkSpec {
     // (Round-5's value-uniform bands put hot AND all colds below it in
     // one band and left the rest empty.)
     val nBands = 256
-    val bounds = RelationalQueries.quantileBandBounds(df, "v", nBands)
-    val counts = df.withColumn("band", RelationalQueries.bandOf(bounds, col("v")))
+    val counts = df
+      .withColumn("band", graft.operators.BandedWindow.quantileBand(df, "v", nBands))
       .groupBy("band").count().collect()
       .map(r => r.getInt(0) -> r.getLong(1)).toMap
     val hotBand = counts.maxBy(_._2)
