@@ -54,10 +54,13 @@ object Bench {
     } else Seq.empty
 
   /** Bench's session, shared with `Profile` so both run the same plans:
-    * `GraftSession.builder` plus a wide initial partition count.
+    * `GraftSession.builder` on `SPARK_GRAFT_CPUS` cores (default: the
+    * host's, at most 32) plus a wide initial partition count.
     */
-  private[graft] def session(cpus: String): SparkSession =
-    GraftSession.start(GraftSession.builder()
+  private[graft] def session(): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      math.min(32, Runtime.getRuntime.availableProcessors()).toString)
+    val spark = GraftSession.start(GraftSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.adaptive.enabled", "true")
@@ -73,38 +76,44 @@ object Bench {
       // joins) get small per-task hash/agg state; small stages shrink
       // back to ~cpus partitions automatically
       .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", "128"))
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
+  /** Bench's run step, shared with `Profile`: one query through the
+    * noop sink, in seconds, or -1.0 if it failed.
+    */
+  private[graft] def runOnce(spark: SparkSession, sfDir: String, name: String): Double = {
+    // measurement isolation: clear any cached plans a prior query
+    // leaked so no query silently reuses another's work. Deliberately
+    // NO System.gc() here: a forced full GC triggers ContextCleaner
+    // shuffle-cleanup storms whose MapOutputTracker contention lands
+    // inside the NEXT timed region (measured: 8 s → 30-60 s on the
+    // dedup pipeline with gc, stable 7.7 s without).
+    spark.catalog.clearCache()
+    val t0 = System.nanoTime()
+    try SparkEntry.queries(name)(spark, sfDir)
+      .write.format("noop").mode("overwrite").save()
+    catch {
+      case e: Throwable =>
+        System.err.println(s"[bench] $name failed: ${e.getMessage}")
+        return -1.0
+    }
+    (System.nanoTime() - t0) / 1e9
+  }
+
+  /** Warm-up: JIT + OS page cache for the common tables (not timed). */
+  private[graft] def warmUp(spark: SparkSession, sfDir: String): Unit =
+    Seq("q1_agg", "join_inner").foreach(runOnce(spark, sfDir, _))
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors()).toString)
-    val spark = session(cpus)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = session()
     // recorded in the JSON below: a conf-modified window must say so
     // in the artifact or it contaminates the vs_prev baseline chain
     val sessionConf = SessionConf.applyEnv(spark)
 
-    def runOnce(name: String): Double = {
-      // measurement isolation: clear any cached plans a prior query
-      // leaked so no query silently reuses another's work. Deliberately
-      // NO System.gc() here: a forced full GC triggers ContextCleaner
-      // shuffle-cleanup storms whose MapOutputTracker contention lands
-      // inside the NEXT timed region (measured: 8 s → 30-60 s on the
-      // dedup pipeline with gc, stable 7.7 s without).
-      spark.catalog.clearCache()
-      val t0 = System.nanoTime()
-      try SparkEntry.queries(name)(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
-      catch {
-        case e: Throwable =>
-          System.err.println(s"[bench] $name failed: ${e.getMessage}")
-          return -1.0
-      }
-      (System.nanoTime() - t0) / 1e9
-    }
-
-    // warm-up: JIT + OS page cache for the common tables (not timed)
-    runOnce("q1_agg"); runOnce("join_inner")
+    warmUp(spark, sfDir)
 
     // min of N reps per query: damps JIT/page-cache/GC noise so the
     // number reflects the plan, not the first-run transient. Default 3
@@ -120,7 +129,7 @@ object Bench {
     // back-to-back reps: transient debt a heavy neighbor leaves
     // behind (GC, shuffle-file cleanup) then hits a given query in at
     // most one round, and min-of-rounds discards it
-    val rounds = (0 until reps).map(_ => names.map(n => runOnce(n)))
+    val rounds = (0 until reps).map(_ => names.map(runOnce(spark, sfDir, _)))
     val results = names.zipWithIndex.map { case (n, i) =>
       n -> rounds.map(_(i)).filter(_ >= 0).minOption.getOrElse(-1.0)
     }
@@ -204,7 +213,7 @@ object Bench {
     val regressed = regressedNames.map("\"" + _ + "\"")
     // noise auto-exoneration — rule and rationale on recheckRegressions
     val recheck = recheckRegressions(regressedNames, resultMap, prevQueries,
-      noiseIndex, reps, runOnce)
+      noiseIndex, reps, runOnce(spark, sfDir, _))
     val recheckJson = recheck.map { case (n, r1, r2, s) =>
       s"""${Jsons.jq(n)}:{"ratio":${fmt(r1)},"ratio2":${fmt(r2)},"noise_suspect":$s}"""
     }.mkString("{", ",", "}")

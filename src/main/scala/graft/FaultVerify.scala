@@ -167,7 +167,8 @@ object FaultVerify {
 
   /** Fires once, at the start of the `target`-th job observed while
     * armed, SIGKILLing the executor `pickVictim` chooses. Records when
-    * and whom.
+    * and whom. A listener of its own, not [[Metrics]]: it injects a
+    * fault mid-run and measures nothing.
     */
   private final class KillAtJob(target: Int,
       pickVictim: () => Option[(String, ProcessHandle)]) extends SparkListener {

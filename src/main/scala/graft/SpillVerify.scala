@@ -1,9 +1,7 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import java.util.concurrent.atomic.AtomicLong
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 
 /** Spill-parity sweep: prove the heavy-shuffle gates complete and
@@ -33,8 +31,9 @@ import org.apache.spark.sql.SparkSession
   *    compare certifies.
   *
   * Per gate the sweep records memoryBytesSpilled / diskBytesSpilled /
-  * shuffle bytes written (task-metric sums via listener) and the
-  * signature match. Gates in [[nonSpillableContract]] carry the one
+  * shuffle bytes written (the gate's task-metric sums from [[Metrics]];
+  * docs/verification.md, "Task metrics") and the signature match.
+  * Gates in [[nonSpillableContract]] carry the one
   * exception: a deliberately non-spillable hash build must fail LOUD
   * with its documented error and then match after the documented
   * partition-count lever is applied. The artifact is only `ok` if
@@ -47,42 +46,6 @@ import org.apache.spark.sql.SparkSession
   * 2 on an unknown gate name.
   */
 object SpillVerify {
-
-  /** Task-metric accumulator. Listener events are delivered async;
-    * [[drain]] polls until the counters go quiet so per-gate resets
-    * don't race the bus.
-    */
-  private final class SpillListener extends SparkListener {
-    val mem = new AtomicLong; val disk = new AtomicLong
-    val shuffleWrite = new AtomicLong; val tasks = new AtomicLong
-    override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
-      val m = t.taskMetrics
-      if (m != null) {
-        mem.addAndGet(m.memoryBytesSpilled)
-        disk.addAndGet(m.diskBytesSpilled)
-        shuffleWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        tasks.incrementAndGet()
-      }
-    }
-    def reset(): Unit = { mem.set(0); disk.set(0); shuffleWrite.set(0); tasks.set(0) }
-    def snapshot: (Long, Long, Long, Long) =
-      (mem.get(), disk.get(), shuffleWrite.get(), tasks.get())
-    def drain(maxMs: Long = 10000): Unit = {
-      // one quiet 200ms interval is not enough — a GC pause or a
-      // listener-bus backlog right after a heavy spilling gate can
-      // stall delivery longer than that, and an under-drain either
-      // misattributes bytes to the next gate or drops the final
-      // gate's spill entirely. Require three consecutive quiet polls.
-      var last = snapshot
-      var quiet = 0
-      val deadline = System.currentTimeMillis() + maxMs
-      while (System.currentTimeMillis() < deadline && quiet < 3) {
-        Thread.sleep(200)
-        val now = snapshot
-        if (now == last) quiet += 1 else { quiet = 0; last = now }
-      }
-    }
-  }
 
   /** The shuffle-heavy slice: exploded-shingle aggregation joins
     * (the dedup family), a global sort, wide window functions, a wide
@@ -251,14 +214,11 @@ object SpillVerify {
   private def pressureGates(spark: SparkSession, names: Seq[String],
       refs: Map[String, (ClusterVerify.Sig, Double)],
       sfDir: String): Seq[GateOut] = {
-      val listener = new SpillListener
-      spark.sparkContext.addSparkListener(listener)
-      try names.map { n =>
-        listener.reset()
+      names.map { n =>
         val t0 = System.nanoTime()
         def attempt(): Boolean =
           ClusterVerify.signature(gateDf(spark, n, sfDir)) == refs(n)._1
-        val (outcome, err) =
+        val ((outcome, err), m) = Metrics.measure(spark) {
           try {
             if (attempt()) ("match", None)
             else ("mismatch", Some("signature mismatch under pressure"))
@@ -299,14 +259,15 @@ object SpillVerify {
                 case _ => ("error", Some(msg))
               }
           }
+        }
         val secs = (System.nanoTime() - t0) / 1e9
-        listener.drain()
-        val (mem, disk, sw, _) = listener.snapshot
+        val out = GateOut(n, outcome, err, m.memorySpilled, m.diskSpilled,
+          m.shuffleWriteBytes, refs(n)._2, secs)
         System.err.println(f"[spill-verify] $n%-22s ${secs}%6.1fs " +
-          f"spill mem=${mem / 1e6}%8.1fMB disk=${disk / 1e6}%7.1fMB " +
-          f"shuffle=${sw / 1e6}%7.1fMB $outcome%s")
-        GateOut(n, outcome, err, mem, disk, sw, refs(n)._2, secs)
-      } finally spark.sparkContext.removeSparkListener(listener)
+          f"spill mem=${out.memSpilled / 1e6}%8.1fMB disk=${out.diskSpilled / 1e6}%7.1fMB " +
+          f"shuffle=${out.shuffleWrite / 1e6}%7.1fMB $outcome%s")
+        out
+      }
   }
 
   def main(args: Array[String]): Unit = {

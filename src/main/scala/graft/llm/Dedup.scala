@@ -994,8 +994,9 @@ object Dedup {
     *
     * Scale shape: the [[ngramJaccardPairs]] 8-byte-hash inverted-index
     * count join ([[sharedCounts]]) with the size-ratio prune, run twice
-    * with asymmetric sides — batch×existing (existing shingles are index-only; the
-    * served text never moves) and batch×batch. Per-batch cost is
+    * with asymmetric sides — batch×existing (existing shingles are
+    * index-only; the served text never moves) and batch×batch, each
+    * planned once. Per-batch cost is
     * Σ df_batch·(df_existing + df_batch) per shingle — batch-sized,
     * never corpus². Output: every batch doc with its blocker counts
     * and the admit verdict.
@@ -1005,25 +1006,30 @@ object Dedup {
       threshold: Double): DataFrame = {
     def inv(df: DataFrame) = postings(shingleSets(df, textCol, idCol, shingleN))
     val b = inv(batch)
-    def blockers(other: DataFrame, pair: Column) =
+    def nearDups(other: DataFrame, pair: Column) =
       sharedCounts(b, other, pair && jaccardSizeBound(threshold))
         .filter(jaccard >= threshold)
-        .groupBy(col("ia").as("doc_id")).agg(count(lit(1)).as("n"))
     // a batch doc blocked by the corpus can't itself block its batch
     // peers (it is not admitted), so peer-blocking only counts
     // lower-id peers that are THEMSELVES corpus-clean — see the
-    // admission-policy contract in the doc comment.
-    val corpusBlocked = blockers(inv(existing), lit(true))
-      .withColumnRenamed("n", "n_corpus_blockers")
-    val cleanIds = batch.select(col(idCol).as("doc_id"))
-      .join(corpusBlocked.select("doc_id"), Seq("doc_id"), "left_anti")
-    val peerBlocked = blockers(
-        pinJoinWidth(b.join(cleanIds, "doc_id"), "h"),
-        col("r.doc_id") < col("l.doc_id"))
-      .withColumnRenamed("n", "n_peer_blockers")
+    // admission-policy contract in the doc comment. One frame carries
+    // both counts, so the corpus join is planned once: a row per
+    // corpus-blocked doc (keyed by itself, with its corpus count) and
+    // a row per (doc, lower-id batch near-dup) keyed by the peer; the
+    // window over the key hands each peer row its peer's corpus count.
+    val corpusRows = nearDups(inv(existing), lit(true))
+      .groupBy(col("ia").as("key")).agg(count(lit(1)).as("nc"))
+      .select(col("key"), col("key").as("doc_id"), col("nc"), lit(false).as("peer"))
+    val peerRows = nearDups(b, col("r.doc_id") < col("l.doc_id"))
+      .select(col("ib").as("key"), col("ia").as("doc_id"), lit(0L).as("nc"),
+        lit(true).as("peer"))
+    val blockers = corpusRows.unionByName(peerRows)
+      .withColumn("key_nc", sum(col("nc")).over(Window.partitionBy("key")))
+      .groupBy("doc_id")
+      .agg(sum(col("nc")).as("n_corpus_blockers"),
+        count(when(col("peer") && col("key_nc") === 0, lit(1))).as("n_peer_blockers"))
     batch.select(col(idCol).as("doc_id"))
-      .join(corpusBlocked, Seq("doc_id"), "left")
-      .join(peerBlocked, Seq("doc_id"), "left")
+      .join(blockers, Seq("doc_id"), "left")
       .select(col("doc_id"),
         coalesce(col("n_corpus_blockers"), lit(0L)).as("n_corpus_blockers"),
         coalesce(col("n_peer_blockers"), lit(0L)).as("n_peer_blockers"),

@@ -19,19 +19,21 @@ final class Pipeline(spec: PipelineSpec) {
   /** Deploy-time validation (reference configurePipeline semantics):
     * structural checks + per-stage validate (deployCompile), failures
     * collected, not thrown one by one. Known args are substituted;
-    * unknown macros stay in place and the checks that depend on them
-    * are skipped (reference containsMacro gate) — run() resolves
-    * strictly.
+    * unknown macros stay in place and a stage still holding one skips
+    * its own check (reference containsMacro gate) — run() resolves
+    * strictly, leaving no macro, and checks every stage.
     */
   def validate(runtimeArgs: Map[String, String] = Map.empty): Seq[String] =
-    check(spec.resolveMacros(runtimeArgs, strict = false))._2
+    check(spec.resolveMacros(runtimeArgs, strict = false),
+      _.properties.values.exists(PipelineSpec.hasMacro))._2
 
   /** Builds every stage of `sp` once, in topological order, and checks
-    * the graph and each stage. Returns the built stages (none when the
-    * graph cannot be ordered or a stage type is unknown) and the
-    * collected errors.
+    * the graph and each stage but the `deferred` ones. Returns the
+    * built stages (none when the graph cannot be ordered or a stage
+    * type is unknown) and the collected errors.
     */
-  private def check(sp: PipelineSpec): (Seq[Stage], Seq[String]) = {
+  private def check(sp: PipelineSpec,
+      deferred: StageSpec => Boolean): (Seq[Stage], Seq[String]) = {
     val errs = Seq.newBuilder[String]
     val names = sp.stages.map(_.name)
     names.diff(names.distinct).distinct.foreach(n =>
@@ -44,7 +46,7 @@ final class Pipeline(spec: PipelineSpec) {
       val built = sp.topoOrder.map(s => StageRegistry.build(s, sp.inputsOf(s.name)))
       val byName = built.map(st => st.name -> st).toMap
       built.foreach { st =>
-        errs ++= st.validate().map(e => s"stage '${st.name}': $e")
+        if (!deferred(st.spec)) errs ++= st.validate().map(e => s"stage '${st.name}': $e")
         val ins = sp.inputsOf(st.name)
         val badUpstream = ins.filter(i => byName.get(i).exists(_.isInstanceOf[SinkStage]))
         badUpstream.foreach(i => errs += s"stage '${st.name}' reads from sink '$i'")
@@ -82,7 +84,7 @@ final class Pipeline(spec: PipelineSpec) {
   def runWithLineage(spark: SparkSession,
       runtimeArgs: Map[String, String] = Map.empty): (Map[String, DataFrame], Seq[LineageEntry]) = {
     val resolved = spec.resolveMacros(runtimeArgs)
-    val (stages, errors) = check(resolved)
+    val (stages, errors) = check(resolved, deferred = _ => false)
     if (errors.nonEmpty)
       throw new IllegalStateException(
         "pipeline validation failed:\n" + errors.mkString("\n"))

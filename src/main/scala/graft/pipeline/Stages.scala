@@ -453,12 +453,11 @@ sealed trait DynamicStage[E] extends Stage {
     resolve(compiled.loadObject(objectName)))
 
   /** deployCompile analogue (ScalaSparkCompute.java:74-78): compile,
-    * load and shape-check early unless disabled or the stage still
-    * carries macros (checked once run() has resolved them).
+    * load and shape-check early unless disabled. (`Pipeline.validate`
+    * defers a stage that still carries macros to run.)
     */
   override def validate(): Seq[String] =
-    if (spec.properties.get("deployCompile").contains("false")
-      || spec.properties.values.exists(PipelineSpec.hasMacro)) Nil
+    if (spec.properties.get("deployCompile").contains("false")) Nil
     else try { entry; Nil }
     catch {
       case e: DynamicCompiler.CompileException => e.errors
@@ -536,14 +535,11 @@ final class PySparkProgram(val spec: StageSpec) extends ComputeStage {
       // throwing here would abort validation of the whole pipeline
       case None => Seq(s"stage '$name': missing required property 'pythonCode'")
       case Some(code) =>
-        // deploy-time semantics: an unresolved ${macro} is not an error
-        // in EITHER property (reference containsMacro gates both
-        // pythonCode and pyFiles) — the checks run once run() resolves
-        // strictly
-        graft.dynamic.PySparkRunner.validatePyFiles(
-          pyFiles.filterNot(PipelineSpec.hasMacro).map(PipelineSpec.literal)) ++
-          (if (PipelineSpec.hasMacro(code)) Nil
-           else graft.dynamic.PySparkRunner.syntaxCheck(PipelineSpec.literal(code)))
+        // `Pipeline.validate` defers a stage holding an unresolved
+        // ${macro} in EITHER property (reference containsMacro gates
+        // both pythonCode and pyFiles) to run
+        graft.dynamic.PySparkRunner.validatePyFiles(pyFiles.map(PipelineSpec.literal)) ++
+          graft.dynamic.PySparkRunner.syntaxCheck(PipelineSpec.literal(code))
     }
   }
 

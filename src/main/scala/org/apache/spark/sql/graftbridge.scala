@@ -1,5 +1,6 @@
 package org.apache.spark.sql.graftbridge
 
+import org.apache.spark.scheduler.StageInfo
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession, classic}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.{HintInfo, PREFER_SHUFFLE_HASH, ResolvedHint}
@@ -21,12 +22,24 @@ object bridge {
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
       name, builder, "scala_udf")
 
-  /** Drain the async listener bus (diagnostics only — Profile uses it
-    * to fence stage-completed events against its record toggle; the
-    * bus is `private[spark]`, hence the bridge).
+  /** Drain the async listener bus: every event posted so far has
+    * reached every listener when this returns (`graft.Metrics` reads
+    * its counts after it; the bus is `private[spark]`).
     */
   def waitListenerBusEmpty(spark: SparkSession, timeoutMs: Long): Unit =
     spark.sparkContext.listenerBus.waitUntilEmpty(timeoutMs)
+
+  /** A stage named by the operators that built it: the names of the
+    * distinct RDD operation scopes of its RDDs in RDD id order, e.g.
+    * `AQEShuffleRead -> WholeStageCodegen (3) -> Exchange` (the Spark
+    * UI's DAG boxes; the scope type is `private[spark]`). Falls back to
+    * the call-site name, which for an AQE query stage only names the
+    * future that submitted it.
+    */
+  def stageLabel(si: StageInfo): String = {
+    val scopes = si.rddInfos.sortBy(_.id).flatMap(_.scope).distinct.map(_.name.trim)
+    if (scopes.isEmpty) si.name else scopes.mkString(" -> ")
+  }
 
   /** `df` as a join side carrying Spark's internal PREFER_SHUFFLE_HASH
     * strategy hint (the one AQE's DynamicJoinSelection sets; no public

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.metrics.source.CodegenMetrics
-
 /** Spark keeps compiled generated classes in one JVM-wide cache whose
   * size the first code-generating session fixes. The engine sizes it in
   * `GraftSession.builder`; at Spark's default of 100 entries a query
@@ -11,11 +9,7 @@ import org.apache.spark.metrics.source.CodegenMetrics
 class CodegenCacheSpec extends SparkSpec {
 
   /** Janino compiles started while `body` runs, JVM-wide. */
-  private def compiles(body: => Unit): Long = {
-    val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
-    body
-    CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
-  }
+  private def compiles(body: => Unit): Long = Metrics.measure(spark)(body)._2.compiles
 
   test("the suites' session carries the engine's codegen cache size") {
     assert(spark.conf.get("spark.sql.codegen.cache.maxEntries") ==

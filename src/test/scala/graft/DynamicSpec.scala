@@ -351,6 +351,12 @@ class DynamicSpec extends SparkSpec {
                      |  df.select(lit(s"v\${undefinedName}").as("tag"))""".stripMargin)
     val errs = new Pipeline(bad).validate(args)
     assert(errs.exists(_.contains("undefinedName")), errs.mkString("; "))
+    // so does run's own check: strict resolution leaves `${n}`, no macro
+    val typeError = spec(
+      """def transform(df: DataFrame): DataFrame = { val n = 7; df.select(lit(s"v\${n}")).count }""")
+    val e = intercept[IllegalStateException](new Pipeline(typeError).run(spark))
+    assert(e.getMessage.startsWith("pipeline validation failed") &&
+      e.getMessage.contains("type mismatch"), e.getMessage)
     // an unresolved macro still defers the deploy check
     assert(new Pipeline(good).validate().isEmpty)
     new Pipeline(good).run(spark, args)

@@ -161,10 +161,12 @@ class PlanAuditSpec extends SparkSpec {
         Some(h.expressions.collect { case a: Attribute => a.name })
       case _ => None
     }
-    // incremental: the corpus-blocker join is planned twice (it feeds
-    // the clean-peer anti-join and the output join), plus the peer join
+    // incremental: the batch × corpus join and the batch × batch peer
+    // join, each planned once (one frame carries both blocker counts;
+    // the corpus join used to be planned twice, for the clean-peer
+    // anti-join and for the output join)
     val postingJoins = Map("dedup_containment" -> 1, "dedup_ngram_jaccard" -> 1,
-      "dedup_incremental_neardup" -> 3, "split_decontaminate" -> 1)
+      "dedup_incremental_neardup" -> 2, "split_decontaminate" -> 1)
     for ((name, nJoins) <- postingJoins) {
       val plan = initialPlan(name)
       val joins = plan.collect {
@@ -174,9 +176,8 @@ class PlanAuditSpec extends SparkSpec {
       joins.foreach { j =>
         assert(j.isInstanceOf[ShuffledHashJoinExec], s"$name: ${j.nodeName} on h")
         // a side may reach the join through a partitioning-preserving
-        // node (incremental's peer side: a broadcast join onto the
-        // pinned batch postings), so read the side's partitioning and
-        // the first shuffle under it
+        // node, so read the side's partitioning and the first shuffle
+        // under it
         j.children.foreach { side =>
           assert(hashNames(side.outputPartitioning).contains(Seq("h")) &&
             side.outputPartitioning.numPartitions == width,

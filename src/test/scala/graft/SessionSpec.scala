@@ -71,8 +71,6 @@ class SessionSpec extends SparkSpec {
   }
 
   test("salted join balances tasks under a 10%-hot key (no task >4x median shuffle read)") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-    import spark.implicits._
     val conf = spark.conf
     val prev = Seq("spark.sql.adaptive.enabled",
       "spark.sql.autoBroadcastJoinThreshold", "spark.sql.shuffle.partitions")
@@ -92,37 +90,12 @@ class SessionSpec extends SparkSpec {
         col("id").as("payload"))
       val small = spark.range(7000).select(col("id").as("sk"), (col("id") * 3).as("attr"))
 
-      // per-stage shuffle-read record counts; the join stage is the one
-      // reading the most records
-      val byStage = scala.collection.mutable.Map.empty[Int, scala.collection.mutable.ArrayBuffer[Long]]
-      val listener = new SparkListener {
-        override def onTaskEnd(te: SparkListenerTaskEnd): Unit = synchronized {
-          if (te.taskMetrics != null)
-            byStage.getOrElseUpdate(te.stageId,
-              scala.collection.mutable.ArrayBuffer.empty[Long]) +=
-              te.taskMetrics.shuffleReadMetrics.recordsRead
-        }
-      }
+      // per-task shuffle-read record counts of the join stage, the
+      // stage reading the most records
       def joinStageStats(df: org.apache.spark.sql.DataFrame): (Long, Seq[Long]) = {
-        byStage.synchronized(byStage.clear())
-        spark.sparkContext.addSparkListener(listener)
-        try {
-          val total = df.agg(sum(col("payload") + col("attr"))).head().getLong(0)
-          // listener bus drains asynchronously — poll until the join
-          // stage's task count stabilizes
-          var snapshot = Seq.empty[Long]
-          var stable = 0
-          var waited = 0
-          while (stable < 3 && waited < 100) {
-            Thread.sleep(100); waited += 1
-            val cur = listener.synchronized {
-              if (byStage.isEmpty) Seq.empty[Long]
-              else byStage.values.maxBy(_.sum).toSeq
-            }
-            if (cur == snapshot && cur.nonEmpty) stable += 1 else { stable = 0; snapshot = cur }
-          }
-          (total, snapshot)
-        } finally spark.sparkContext.removeSparkListener(listener)
+        val (total, metrics) = Metrics.measure(spark)(
+          df.agg(sum(col("payload") + col("attr"))).head().getLong(0))
+        (total, metrics.stages.map(_.shuffleReadRecords).maxBy(_.sum))
       }
 
       val (plainTotal, plainTasks) = joinStageStats(big.join(small, big("k") === small("sk")))

@@ -33,6 +33,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * register in docs/verification.md; its write-side arbitration is the
   * same OutputCommitCoordinator path WriteRetrySpec exercises for
   * failed attempts.
+  *
+  * The spec keeps a listener of its own rather than [[Metrics]]: the
+  * speculation events it counts are scheduler events that no task
+  * metric carries.
   */
 class SpeculationSpec extends AnyFunSuite {
   private val sfDir = "/root/testdata/sf0.01"
@@ -96,9 +100,9 @@ class SpeculationSpec extends AnyFunSuite {
         df.write.mode("overwrite").parquet(out)
         val got = spark.read.parquet(out)
           .selectExpr("sum(v)", "count(*)").as[(Long, Long)].head()
-        // give the 50ms-interval scheduler a beat to emit the event
-        // for the straggler before the session tears down
-        Thread.sleep(300)
+        // the scheduler marked the straggler while it ran, so its
+        // event is on the listener bus: drain it before reading
+        org.apache.spark.sql.graftbridge.bridge.waitListenerBusEmpty(spark, 30000)
         if (specStarts.get() > 0)
           System.err.println(s"[speculation] ${specStarts.get()} speculative " +
             "copies actually LAUNCHED (multi-host rig?)")

@@ -1,9 +1,5 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicLong
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-
 /** CI guard for the spill path (companion to [[SpillVerify]]'s full
   * committed sweep): force every sorter/window buffer to spill via the
   * runtime force-spill thresholds, run a window-heavy gate, and pin
@@ -33,29 +29,15 @@ class SpillSpec extends SparkSpec {
     val fn = SparkEntry.queries("window_rank")
     val ref = ClusterVerify.signature(fn(spark, sf01))
 
-    val disk = new AtomicLong
-    val listener = new SparkListener {
-      override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
-        val m = t.taskMetrics
-        if (m != null) disk.addAndGet(m.diskBytesSpilled)
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
     try {
       thresholdKeys.foreach(spark.conf.set(_, "512"))
-      val forced = ClusterVerify.signature(fn(spark, sf01))
+      val (forced, metrics) =
+        Metrics.measure(spark)(ClusterVerify.signature(fn(spark, sf01)))
       assert(forced == ref,
         s"spilled run diverged from in-memory run: $forced vs $ref")
-      // listener events are async; poll briefly for the metrics
-      val deadline = System.currentTimeMillis() + 5000
-      while (disk.get() == 0 && System.currentTimeMillis() < deadline)
-        Thread.sleep(100)
-      assert(disk.get() > 0,
+      assert(metrics.diskSpilled > 0,
         "force-spill thresholds at 512 elements produced no disk spill — " +
           "the spill path did not execute and this spec proved nothing")
-    } finally {
-      thresholdKeys.foreach(spark.conf.unset)
-      spark.sparkContext.removeSparkListener(listener)
-    }
+    } finally thresholdKeys.foreach(spark.conf.unset)
   }
 }
