@@ -180,7 +180,7 @@ object ClusterVerify {
 
     // Phase B — two real executor JVMs. The graft library rides the
     // executor classpath (= a cluster's app assembly / --jars);
-    // runtime-compiled gate code still ships via addArtifact/addJar.
+    // runtime-compiled gate code still ships via addJar.
     System.err.println(s"[cluster-verify] phase B: $clusterMaster")
     val cluster = withSession(b => clusterBase(b, clusterMaster)
       .appName("graft-cluster-verify-cluster")

@@ -66,12 +66,25 @@ object GraftSession {
     */
   val CodegenCacheEntries: Int = 4096
 
+  /** Spark's session-isolated artifacts, off. Dynamic stages ship their
+    * jars through `sparkContext.addJar` alone (`Compiled.shipTo`), which
+    * every task sees when no session carries artifact state. With
+    * isolation on, each session jar gives SQL work a new classloader,
+    * and Spark's codegen cache, keyed by (context classloader, code),
+    * compiles byte-identical classes again; a stream's session clone
+    * also re-registers the jars under its own path. A session built
+    * without this conf fails at `shipTo`.
+    */
+  val ArtifactIsolationKey = "spark.sql.artifact.isolation.enabled"
+
   /** The conf every graft session carries, whatever its master and
-    * partitioning: the codegen cache size, UTC, no UI. Callers add
-    * their own master and shuffle settings, then `start` it.
+    * partitioning: the codegen cache size, no artifact isolation, UTC,
+    * no UI. Callers add their own master and shuffle settings, then
+    * `start` it.
     */
   def builder(): SparkSession.Builder = SparkSession.builder()
     .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
+    .config(ArtifactIsolationKey, "false")
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.ui.enabled", "false")
 

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, unix_micros}
-import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{StructType, TimestampNTZType, TimestampType}
 
 /** Table catalog over a driver-generated scale-factor directory
   * (see TESTDATA.md): TPC-H-ish star schema + `events` + LLM tables.
@@ -34,11 +34,43 @@ object Tables {
     // downstream call site untouched. Session tz is UTC, so the NTZ→TZ
     // cast is a no-op reinterpretation.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val df = spark.read.parquet(s"$sfDir/$name.parquet")
+    val df = readParquet(spark, s"$sfDir/$name.parquet")
     df.schema.find(_.name == "ts").map(_.dataType) match {
       case Some(TimestampType) | Some(TimestampNTZType) =>
         df.withColumn("ts", unix_micros(col("ts").cast(TimestampType)) * 1000L)
       case _ => df // LongType (nanos) or no ts column — already normalized
+    }
+  }
+
+  /** Schemas already inferred, keyed by table path and file listing
+    * (path, size, modification time of every file). Inferring one reads
+    * parquet footers in a Spark job of its own; a rewritten table lists
+    * differently and is inferred again.
+    */
+  private val schemas =
+    new java.util.concurrent.ConcurrentHashMap[(String, Seq[(String, Long, Long)]), StructType]()
+
+  private def readParquet(spark: SparkSession, path: String): DataFrame = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val listing =
+      try {
+        val files = p.getFileSystem(spark.sparkContext.hadoopConfiguration).listFiles(p, true)
+        val b = scala.collection.mutable.ArrayBuffer.empty[(String, Long, Long)]
+        while (files.hasNext) {
+          val f = files.next()
+          b += ((f.getPath.toString, f.getLen, f.getModificationTime))
+        }
+        Some(b.sorted.toSeq)
+      } catch { case _: java.io.FileNotFoundException => None }
+    listing match {
+      case None => spark.read.parquet(path) // Spark reports the missing path
+      case Some(files) =>
+        val schema = Option(schemas.get((path, files))).getOrElse {
+          val inferred = spark.read.parquet(path).schema
+          schemas.put((path, files), inferred)
+          inferred
+        }
+        spark.read.schema(schema).parquet(path)
     }
   }
 

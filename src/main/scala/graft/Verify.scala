@@ -54,10 +54,9 @@ object Verify {
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>
-        // one retry: rare transient task failures (observed once: an
-        // executor's fetch of an addArtifact'd dynamic jar raced its
-        // registration) must not zero a whole round's row for a query
-        // that is deterministic and green on re-run
+        // one retry: a rare transient task failure must not zero a
+        // whole round's row for a query that is deterministic and
+        // green on re-run
         def attempt(): Unit = fn(spark, sfDir).coalesce(1)
           .write.mode("overwrite").parquet(s"$outDir/$name")
         try attempt()

@@ -12,6 +12,8 @@ import scala.reflect.internal.util.BatchSourceFile
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.GraftSession
+
 /** Runtime Scala compilation for dynamic pipeline stages — the
   * reference's core capability (ScalaSparkCodeExecutor.java:210-231,
   * SparkCompilers.java:78-147) rebuilt on scala.tools.nsc for
@@ -40,16 +42,19 @@ object DynamicCompiler {
       cls.getField("MODULE$").get(null)
     }
 
-    /** Register the jar with the session so executors can load the
-      * classes (needed for typed lambdas; Column-only code never ships
-      * classes). Spark 4 runs SQL-derived tasks (df.rdd, Dataset
-      * lambdas) under session-isolated artifact state whose executor
-      * classloader sees `addArtifact` jars but NOT `sparkContext
-      * .addJar` jars — while bare-RDD jobs see only the latter. Ship
-      * through both channels.
+    /** Register the jar with the SparkContext so executors can load
+      * the classes (needed for typed lambdas; Column-only code never
+      * ships classes). `sparkContext.addJar` reaches SQL-derived and
+      * bare-RDD tasks alike only while the session carries no artifact
+      * state, which `GraftSession.builder()` ensures; an isolated
+      * session would run SQL tasks under a classloader that cannot see
+      * the jar, so it fails here instead.
       */
     def shipTo(spark: SparkSession): Unit = {
-      spark.addArtifact(jar.toString)
+      require(spark.conf.get(GraftSession.ArtifactIsolationKey) == "false",
+        "dynamic code ships through sparkContext.addJar, which SQL tasks of a " +
+          "session with isolated artifacts do not see: build the session from " +
+          s"GraftSession.builder() or set ${GraftSession.ArtifactIsolationKey}=false")
       spark.sparkContext.addJar(jar.toUri.toString)
     }
   }
@@ -73,7 +78,7 @@ object DynamicCompiler {
     * hex-encoded like the reference (ScalaSparkCodeExecutor.java:
     * 346-357), plus a source digest: re-running a same-named stage
     * with edited code in one session ships a SECOND jar to executors
-    * (addArtifact/addJar are append-only), and without the digest both
+    * (addJar is append-only), and without the digest both
     * jars would carry conflicting classes under one name — executor
     * classloading could then resolve the stale one.
     */
@@ -169,29 +174,78 @@ object DynamicCompiler {
   def compile(source: String, parentLoader: ClassLoader = getClass.getClassLoader,
       extraClasspath: Seq[Path] = Nil): Compiled = {
     val dir = Files.createTempDirectory("graft-dyn")
-    val settings = new Settings()
+    Cleanup.register(dir)
+    val errors = compilers.synchronized {
+      val c = compilers.computeIfAbsent(extraClasspath, cp => new Warm(cp))
+      var keep = false
+      try {
+        val errs = c.run(source, dir)
+        keep = errs.isEmpty && c.runs < RunsPerCompiler
+        errs
+      } finally if (!keep) compilers.remove(extraClasspath)
+    }
+    if (errors.nonEmpty) throw new CompileException(errors)
+    val jar = jarDirectory(dir)
+    val loader = new URLClassLoader(
+      (dir.toUri.toURL +: extraClasspath.map(_.toUri.toURL)).toArray, parentLoader)
+    new Compiled(dir, jar, loader)
+  }
+
+  /** Runs before a warm compiler is rebuilt, bounding what a long-lived
+    * symbol table can accumulate.
+    */
+  private val RunsPerCompiler = 100
+
+  /** Warm compilers, one per extra-classpath set, least recently used
+    * dropped beyond a few. `Global` is not thread-safe, so every
+    * compile runs under this map's lock.
+    */
+  private val compilers = new java.util.LinkedHashMap[Seq[Path], Warm](4, 0.75f, true) {
+    override def removeEldestEntry(e: java.util.Map.Entry[Seq[Path], Warm]): Boolean =
+      size > 4
+  }
+
+  /** `Global`s built so far in this JVM. */
+  private[graft] val compilersBuilt = new java.util.concurrent.atomic.AtomicInteger()
+
+  /** One scalac `Global` reused across compiles: a new one loads the
+    * whole classpath again, which costs more than most compiles (the
+    * reference likewise keeps its interpreter until the application
+    * ends, ScalaSparkCodeExecutor.java:131-154). Each compile gets a
+    * fresh `Run`, output dir and reporter state; a failed compile
+    * drops the `Global` (its symbols may be half-entered).
+    */
+  private final class Warm(extraClasspath: Seq[Path]) {
+    private val settings = new Settings()
     settings.usejavacp.value = true
     // under sbt/forked JVMs the app classpath is in java.class.path;
     // pass it explicitly too (usejavacp covers plain launches)
     settings.classpath.value =
       (System.getProperty("java.class.path", "") +:
         extraClasspath.map(_.toString)).mkString(File.pathSeparator)
-    settings.outputDirs.setSingleOutput(dir.toString)
-    val reporter = new StoreReporter(settings)
-    val global = new Global(settings, reporter)
-    val run = new global.Run()
-    run.compileSources(List(new BatchSourceFile("<graft-dynamic>", source)))
-    if (reporter.hasErrors) {
-      val msgs = reporter.infos.filter(_.severity == reporter.ERROR)
+    private val reporter = new StoreReporter(settings)
+    private val global = new Global(settings, reporter)
+    compilersBuilt.incrementAndGet()
+    var runs = 0
+
+    /** Compiles `source` into `dir`; returns the errors, empty on success. */
+    def run(source: String, dir: Path): Seq[String] = {
+      runs += 1
+      reporter.reset()
+      settings.outputDirs.setSingleOutput(dir.toString)
+      val run = new global.Run()
+      run.compileSources(List(new BatchSourceFile("<graft-dynamic>", source)))
+      // a fresh compiler would not see this run's top-level classes,
+      // so the next run must not either: a later source naming them
+      // must fail to compile, not fail to load. Names resolve in the
+      // package scope as typer sees it (flatten gives later phases a
+      // copy).
+      run.symSource.keys.foreach(sym =>
+        global.enteringPhase(run.typerPhase)(sym.owner.info.decls.unlink(sym)))
+      reporter.infos.filter(_.severity == reporter.ERROR)
         .map(i => (if (i.pos.isDefined) s"line ${i.pos.line}: " else "") + i.msg)
         .toSeq
-      throw new CompileException(msgs)
     }
-    val jar = jarDirectory(dir)
-    val loader = new URLClassLoader(
-      (dir.toUri.toURL +: extraClasspath.map(_.toUri.toURL)).toArray, parentLoader)
-    Cleanup.register(dir)
-    new Compiled(dir, jar, loader)
   }
 
   /** Temp-artifact cleanup — the reference deletes its compiler dirs on

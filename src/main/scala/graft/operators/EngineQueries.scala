@@ -27,17 +27,6 @@ object EngineQueries {
       args: Map[String, String], stage: String): DataFrame =
     new Pipeline(spec).run(s, args)(stage)
 
-  /** A session without `s`'s session artifacts, for gate streams that
-    * need no dynamic code. A stream clones its session, and the clone
-    * re-registers every session jar with the SparkContext under its own
-    * artifact path. Once the clone is stopped and cleaned up, a later
-    * job that runs without a session artifact state still lists those
-    * jars, and its first task fails fetching them ("Stream
-    * '/artifacts/<clone>/jars/graft-dyn….jar' was not found"). Streams
-    * started here register no jars.
-    */
-  private def artifactFree(s: SparkSession): SparkSession = s.newSession()
-
   /** Shared setup for the stream-stream join gate queries: replay
     * view/purchase events as two file streams, join per user within
     * 30 minutes, drain synchronously to a memory sink.
@@ -503,17 +492,16 @@ object EngineQueries {
         } catch { case _: java.io.IOException => () }
       })
       var q: org.apache.spark.sql.streaming.StreamingQuery = null
-      val ss = artifactFree(s)
       try {
         writer.start()
-        val src = graft.streaming.StreamStages.socketSource(ss,
+        val src = graft.streaming.StreamStages.socketSource(s,
           "127.0.0.1", server.getLocalPort)
         val counts = src
           .select(split(col("value"), " ").getItem(1).as("k"))
           .groupBy("k").agg(count(lit(1)).as("n"))
         q = counts.writeStream.format("memory")
           .queryName("gate_socket_rt").outputMode("complete").start()
-        def total(): Long = ss.table("gate_socket_rt")
+        def total(): Long = s.table("gate_socket_rt")
           .agg(coalesce(sum("n"), lit(0L))).collect()(0).getLong(0)
         val deadline = System.nanoTime() + 90L * 1000 * 1000 * 1000
         while (total() < rows.length && System.nanoTime() < deadline) {
@@ -531,7 +519,7 @@ object EngineQueries {
         writer.join(10000)
         if (client != null) client.close()
       }
-      ss.table("gate_socket_rt").orderBy("k")
+      s.table("gate_socket_rt").orderBy("k")
     },
       Some("""SELECT k, count(*) AS n FROM (
         |  SELECT lang AS k FROM documents ORDER BY doc_id LIMIT 50)
@@ -561,10 +549,9 @@ object EngineQueries {
           ls.map(_ + "\n").mkString.getBytes(java.nio.charset.StandardCharsets.UTF_8),
           java.nio.file.StandardOpenOption.CREATE,
           java.nio.file.StandardOpenOption.APPEND)
-      val ss = artifactFree(s)
-      def drain(): Unit = StreamStages.withGateConf(ss) {
+      def drain(): Unit = StreamStages.withGateConf(s) {
         StreamStages.toParquet(
-          StreamStages.segmentSource(ss, seg.toString), outDir, s"$base/ckpt")
+          StreamStages.segmentSource(s, seg.toString), outDir, s"$base/ckpt")
         ()
       }
       append(lines.take(60)); drain()

@@ -15,9 +15,10 @@ import graft.dynamic.{DynamicCompiler, GraftContext}
   * class "loading on the executor" was never actually proven. This
   * suite boots `local-cluster[2,1,1024]`: a real standalone
   * master/worker pair that spawns TWO SEPARATE EXECUTOR JVM PROCESSES,
-  * which is the exact mechanism `Compiled.shipTo`'s addArtifact+addJar
-  * double-channel exists for (the reference ships its interpreter
-  * output the same way, ScalaSparkTest.java:179-180 / saveAsJar).
+  * which is what `Compiled.shipTo`'s one `addJar` channel must reach
+  * for SQL-derived and bare-RDD tasks alike (the reference ships its
+  * interpreter output the same way, ScalaSparkTest.java:179-180 /
+  * saveAsJar).
   *
   * What ships how (and what would break if shipping failed):
   *  - the graft library itself rides `spark.executor.extraClassPath`
@@ -26,7 +27,7 @@ import graft.dynamic.{DynamicCompiler, GraftContext}
   *  - the RUNTIME-COMPILED stage classes are NOT on that classpath:
   *    they exist only in a driver temp dir created after the executors
   *    launched, so every test here fails with ClassNotFoundException
-  *    on the executor unless the addArtifact/addJar transfer works.
+  *    on the executor unless the addJar transfer works.
   *
   * Each test collects the executing JVM's pid inside the shipped
   * closure and asserts it is NOT the driver pid — positive proof the
@@ -89,7 +90,7 @@ class ClusterDynamicSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(pids.size == 2, s"expected 2 executor JVMs, saw pids $pids")
   }
 
-  test("(a) runtime-compiled closure executes in the executor JVMs (addArtifact channel)") {
+  test("(a) runtime-compiled udf executes in the executor JVMs (addJar channel)") {
     // the udf lambda below is a class INSIDE the runtime-compiled jar:
     // deserializing it on the executor forces the executor classloader
     // to resolve the shipped artifact — in local[*] this resolution is
@@ -153,7 +154,7 @@ class ClusterDynamicSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("(c) dependency-jar symbol resolves in the executor JVMs") {
     // trio part 3 (reference T/ScalaSparkTest.java:175-215): user code
     // compiled against a SEPARATE dependency jar, both jars shipped;
-    // the executor must load the dep's class through the artifact
+    // the executor must load the dep's class through the addJar
     // classloader when the closure calls it
     val helper = DynamicCompiler.compile(
       "object ClusterDepConstants { def scale(x: Long): Long = x * 7L }")
@@ -264,10 +265,9 @@ class ClusterDynamicSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("bare-RDD closure ships through the addJar channel cross-JVM") {
-    // shipTo's SECOND channel: Spark 4 runs bare-RDD jobs under the
-    // non-isolated classloader that sees sparkContext.addJar jars but
-    // NOT session artifacts — a GraftMain program using raw RDDs
-    // exercises exactly that path across the process boundary
+    // the same channel as the SQL-derived tests above: a GraftMain
+    // program using raw RDDs runs jobs that no SQL execution wraps,
+    // exercised here across the process boundary
     val src =
       """import org.apache.spark.sql._
         |import graft.dynamic.{GraftContext, GraftMain}

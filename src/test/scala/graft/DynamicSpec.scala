@@ -411,10 +411,11 @@ class DynamicSpec extends SparkSpec {
   test("concurrent compiles: 4 distinct transforms compiled+run in parallel stay isolated") {
     // The reference serves many concurrently-deployed pipelines from
     // one JVM, so runtime compilation must be safe under concurrency:
-    // each compile builds its OWN scala.tools.nsc Global (shared
-    // Globals are not thread-safe) and SHA-suffixed object names keep
-    // the classloaders from colliding. 4 different multipliers
-    // compiled and invoked at once must each see their own code.
+    // compiles share a warm scala.tools.nsc Global under one lock
+    // (a Global is not thread-safe), each into its own output dir,
+    // and SHA-suffixed object names keep the classloaders from
+    // colliding. 4 different multipliers compiled and invoked at once
+    // must each see their own code.
     import java.util.concurrent.Executors
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration._
@@ -440,5 +441,108 @@ class DynamicSpec extends SparkSpec {
       val got = Await.result(Future.sequence(futures), 5.minutes)
       assert(got.toMap == Map(1 -> 10L, 2 -> 20L, 3 -> 30L, 4 -> 40L))
     } finally pool.shutdownNow()
+  }
+
+  /** Errors of `source` from a scalac `Global` built for it alone,
+    * worded as `CompileException` words them.
+    */
+  private def freshErrors(source: String): Seq[String] = {
+    import scala.tools.nsc.{Global, Settings}
+    import scala.tools.nsc.reporters.StoreReporter
+    val settings = new Settings()
+    settings.usejavacp.value = true
+    settings.classpath.value = System.getProperty("java.class.path", "")
+    settings.outputDirs.setSingleOutput(Files.createTempDirectory("graft-fresh").toString)
+    val reporter = new StoreReporter(settings)
+    val global = new Global(settings, reporter)
+    new global.Run().compileSources(List(
+      new scala.reflect.internal.util.BatchSourceFile("<graft-dynamic>", source)))
+    reporter.infos.filter(_.severity == reporter.ERROR)
+      .map(i => (if (i.pos.isDefined) s"line ${i.pos.line}: " else "") + i.msg).toSeq
+  }
+
+  test("warm compiler: one Global compiles distinct sources, fails like a fresh one, then rebuilds") {
+    def body(i: Int) = s"def transform(df: DataFrame): DataFrame = df.limit($i)"
+    val names = (1 to 5).map(i => DynamicCompiler.classNameFor(s"warm$i", body(i)))
+    val ctx = GraftContext(spark, Map.empty)
+    def runs(name: String, i: Int): Long = DynamicCompiler.resolveFunction(
+      DynamicCompiler.compile(DynamicCompiler.wrap(name, body(i))).loadObject(name),
+      "transform", isVoid = false).invoke(lines, ctx)
+      .asInstanceOf[org.apache.spark.sql.DataFrame].count()
+    val built0 = DynamicCompiler.compilersBuilt.get
+    names.zipWithIndex.foreach { case (n, i) => assert(runs(n, i + 1) == i + 1) }
+    assert(DynamicCompiler.compilersBuilt.get - built0 <= 1, "the five compiles shared one Global")
+    // a type error, and an object an earlier run of this Global
+    // defined: a fresh compiler knows neither
+    val bad = DynamicCompiler.wrap(DynamicCompiler.classNameFor("warmbad"),
+      s"""def transform(df: DataFrame): DataFrame = {
+         |  val n: Int = "five"
+         |  df.limit(${names.head}.hashCode)
+         |}""".stripMargin)
+    val e = intercept[DynamicCompiler.CompileException](DynamicCompiler.compile(bad))
+    val fresh = freshErrors(bad)
+    assert(e.errors == fresh)
+    assert(fresh.exists(_.startsWith("line 11: type mismatch")), fresh.mkString("; "))
+    assert(fresh.exists(m => m.startsWith("line 12:") && m.contains(s"not found: value ${names.head}")),
+      fresh.mkString("; "))
+    val built1 = DynamicCompiler.compilersBuilt.get
+    assert(runs(DynamicCompiler.classNameFor("warm6", body(6)), 6) == 6)
+    assert(DynamicCompiler.compilersBuilt.get == built1 + 1, "a failed compile drops its Global")
+  }
+
+  test("scalaProgram recompiled under the same object name with edited code runs the new code") {
+    import graft.pipeline.{Pipeline, PipelineSpec, StageSpec}
+    def run(n: Int): Long = {
+      val code =
+        s"""import graft.dynamic.{GraftContext, GraftMain}
+           |object ProgEdit extends GraftMain {
+           |  def run(ctx: GraftContext): Unit =
+           |    ctx.saveAsDataset(ctx.spark.range($n).toDF("i"), "prog_edit")
+           |}
+           |""".stripMargin
+      new Pipeline(PipelineSpec(Seq(StageSpec("p", "scalaProgram",
+        Map("mainClass" -> "ProgEdit", "scalaCode" -> code))), Nil)).run(spark)
+      spark.table("prog_edit").count()
+    }
+    assert(run(4) == 4)
+    assert(run(7) == 7)
+    assert(run(4) == 4)
+  }
+
+  test("a session with isolated artifacts fails at shipTo, naming the conf") {
+    val iso = spark.newSession()
+    iso.conf.set(GraftSession.ArtifactIsolationKey, "true")
+    val objName = DynamicCompiler.classNameFor("isolated")
+    val compiled = DynamicCompiler.compile(DynamicCompiler.wrap(objName,
+      "def transform(df: DataFrame): DataFrame = df"))
+    val jars = spark.sparkContext.listJars().toSet
+    val e = intercept[IllegalArgumentException](compiled.shipTo(iso))
+    assert(e.getMessage.contains(s"${GraftSession.ArtifactIsolationKey}=false"), e.getMessage)
+    assert(spark.sparkContext.listJars().toSet == jars, "nothing shipped")
+  }
+
+  test("a shipped jar survives a stream gate on the same session: later jobs fetch nothing stale") {
+    // A stream runs on a clone of its session. With session-isolated
+    // artifacts the clone would register every session jar again
+    // under its own path, and a later job could fail fetching one
+    // once the clone is cleaned up; addJar jars are not cloned.
+    val code =
+      """def transform(df: DataFrame, ctx: GraftContext): DataFrame = {
+        |  import ctx.spark.implicits._
+        |  df.as[Long].map(x => x * 5L + 1L).toDF("v")
+        |}
+        |""".stripMargin
+    val objName = DynamicCompiler.classNameFor("streamship", code)
+    val compiled = DynamicCompiler.compile(DynamicCompiler.wrap(objName, code))
+    compiled.shipTo(spark)
+    val fn = DynamicCompiler.resolveFunction(compiled.loadObject(objName), "transform", isVoid = false)
+    def typed(): Seq[Long] = fn.invoke(spark.range(8).toDF("x"), GraftContext(spark, Map.empty))
+      .asInstanceOf[org.apache.spark.sql.DataFrame].collect().map(_.getLong(0)).toSeq.sorted
+    assert(typed() == (0L until 8L).map(_ * 5L + 1L))
+    val jars = spark.sparkContext.listJars().toSet
+    assert(SparkEntry.queries("stream_dedup")(spark, sfDir).count() > 0)
+    assert(spark.sparkContext.listJars().toSet == jars, "the stream registered jars")
+    assert(typed() == (0L until 8L).map(_ * 5L + 1L))
+    assert(SparkEntry.queries("span_corruption")(spark, sfDir).count() > 0)
   }
 }

@@ -10,20 +10,19 @@ import graft.dynamic.{DynamicCompiler, GraftContext}
   * SURVEY §7 risk 1): many dynamic jars in ONE session, typed-lambda
   * actions from all of them running CONCURRENTLY, one stage re-compiled
   * with edited code every round (the classNameFor digest path — each
-  * edit ships a fresh jar because addArtifact/addJar are append-only).
+  * edit ships a fresh jar because addJar is append-only).
   *
-  * This is the exact surface where the one observed flake lived (an
-  * executor's fetch of an addArtifact'd jar racing its registration —
-  * Verify.scala's retry comment): 10 rounds × 3 stages × concurrent
-  * collect()s ≈ 40 shipped-jar actions per run. The spec runs on a
-  * fresh `newSession()` (the StreamingSpec isolation discipline) so
-  * its ever-growing artifact state cannot bleed into other suites.
+  * 10 rounds × 3 stages × concurrent collect()s ≈ 40 shipped-jar
+  * actions per run, all through the one `sparkContext.addJar` channel.
+  * The spec runs on a fresh `newSession()` (StreamingSpec's own-session
+  * discipline), so its views and conf stay out of other suites.
   *
   * Outcome record (round 8): 10 in-spec rounds × repeated suite runs
-  * never reproduced the 404; documented unreproducible under
-  * single-host local[*] (see the untestable-on-this-rig register in
-  * docs/verification.md). The production guard (Verify's one retry +
-  * the per-query _verify_meta.json sidecar) stays.
+  * never reproduced the one jar-fetch 404 seen in a full-suite run
+  * while jars also shipped as session-isolated artifacts (a stream's
+  * session clone re-registered them); that channel is gone. The
+  * production guard (Verify's one retry + the per-query
+  * _verify_meta.json sidecar) stays.
   */
 class DynamicStressSpec extends SparkSpec {
 

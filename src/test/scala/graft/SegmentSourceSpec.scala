@@ -17,7 +17,7 @@ import graft.streaming.{SegmentMicroBatchStream, SegmentOffset, SegmentReaderFac
   */
 class SegmentSourceSpec extends SparkSpec {
 
-  // StreamingSpec's artifact-free isolated session, same rationale
+  // StreamingSpec's own session on the shared context, same rationale
   override lazy val spark: org.apache.spark.sql.SparkSession =
     GraftSession.builder()
       .master("local[4]")

@@ -254,8 +254,8 @@ class SitingAuditSpec extends SparkSpec {
     * what disease (b) is about.
     */
   test("streaming micro-batch plans carry no mis-sited expensive expressions") {
-    // StreamingSpec's artifact-flake dodge: a fresh session isolates
-    // memory-sink catalogs and gate conf from the shared suites
+    // a fresh session keeps the gates' memory-sink views and conf
+    // away from the shared suites
     val ss = spark.newSession()
     val streamGates = SparkEntry.queries.keys.filter(_.startsWith("stream_"))
       .toSeq.sorted

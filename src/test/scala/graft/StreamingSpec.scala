@@ -7,14 +7,11 @@ import graft.streaming.StreamStages
 
 class StreamingSpec extends SparkSpec {
 
-  // Isolated session state on the shared SparkContext: DynamicSpec
-  // ships runtime-compiled jars into the shared session via
-  // addArtifact, and a streaming query's CLONED session can race
-  // Spark's per-session artifact serving — an executor task then
-  // 404s fetching /artifacts/<uuid>/jars/graft-dyn*.jar
-  // (seen intermittently in full-suite runs). Streaming needs no
-  // dynamic jars, so an artifact-free session removes the fetch
-  // entirely instead of retrying around the race.
+  // Its own session on the shared SparkContext, so these streams'
+  // memory-sink views and conf changes stay out of the shared
+  // session. (Dynamic jars ship through sparkContext.addJar alone, so
+  // no session holds jars a stream's session clone could register
+  // again; DynamicSpec runs a stream gate after shipping one.)
   override lazy val spark: org.apache.spark.sql.SparkSession =
     GraftSession.builder()
       .master("local[4]")
