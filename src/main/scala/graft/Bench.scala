@@ -80,8 +80,9 @@ object Bench {
     spark
   }
 
-  /** Bench's run step, shared with `Profile`: one query through the
-    * noop sink, in seconds, or -1.0 if it failed.
+  /** Bench's run step, shared with `Profile` and the scale curves
+    * (`ScaleCurves.timeGates`): one query through the noop sink, in
+    * seconds, or -1.0 if it failed.
     */
   private[graft] def runOnce(spark: SparkSession, sfDir: String, name: String): Double = {
     // measurement isolation: clear any cached plans a prior query

@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import org.apache.spark.sql.graftbridge.bridge
 import graft.functions.{PolyHash, VectorDot, WinnowKeys, WordShingles}
 
@@ -20,40 +22,32 @@ import graft.functions.{PolyHash, VectorDot, WinnowKeys, WordShingles}
   * partitioning.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectFunction((org.apache.spark.sql.catalyst.FunctionIdentifier("poly_hash"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[PolyHash].getName, "poly_hash"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        PolyHash(exprs.head)))
-    e.injectFunction((org.apache.spark.sql.catalyst.FunctionIdentifier("vector_dot"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[VectorDot].getName, "vector_dot"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        VectorDot(exprs(0), exprs(1))))
-    e.injectFunction((org.apache.spark.sql.catalyst.FunctionIdentifier("word_shingles"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[WordShingles].getName, "word_shingles"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        WordShingles(exprs(0),
-          exprs(1).eval().asInstanceOf[Int])))
-  }
+  override def apply(e: SparkSessionExtensions): Unit =
+    GraftSession.sqlFunctions.foreach { case (name, build) =>
+      e.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo(build.getClass.getName, name), build))
+    }
 }
 
 object GraftSession {
 
+  /** The engine's SQL functions, by name: the one table that both
+    * `GraftExtensions` and `registerFunctions` register.
+    */
+  private[graft] val sqlFunctions: Seq[(String, Seq[Expression] => Expression)] = {
+    def int(e: Expression): Int = e.eval().asInstanceOf[Int]
+    Seq(
+      "poly_hash" -> (exprs => PolyHash(exprs.head)),
+      "vector_dot" -> (exprs => VectorDot(exprs(0), exprs(1))),
+      "word_shingles" -> (exprs => WordShingles(exprs(0), int(exprs(1)))),
+      "winnow_keys" -> (exprs => WinnowKeys(exprs(0), int(exprs(1)), int(exprs(2)))))
+  }
+
   /** Register the engine's SQL functions on an existing session (for
     * sessions not built with `spark.sql.extensions`).
     */
-  def registerFunctions(spark: SparkSession): Unit = {
-    bridge.registerFunction(spark, "poly_hash", exprs => PolyHash(exprs.head))
-    bridge.registerFunction(spark, "vector_dot", exprs => VectorDot(exprs(0), exprs(1)))
-    bridge.registerFunction(spark, "word_shingles",
-      exprs => WordShingles(exprs(0), exprs(1).eval().asInstanceOf[Int]))
-    bridge.registerFunction(spark, "winnow_keys",
-      exprs => WinnowKeys(exprs(0), exprs(1).eval().asInstanceOf[Int],
-        exprs(2).eval().asInstanceOf[Int]))
-  }
+  def registerFunctions(spark: SparkSession): Unit =
+    sqlFunctions.foreach { case (name, build) => bridge.registerFunction(spark, name, build) }
 
   /** Entries in Spark's JVM-wide cache of compiled generated classes
     * (`spark.sql.codegen.cache.maxEntries`, default 100). The engine's

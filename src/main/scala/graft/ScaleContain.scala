@@ -83,31 +83,18 @@ object ScaleContain {
       ScaleCurves.timeGates(spark, Seq(g), gm, dirs)
     }
 
-    def numOrNull(d: Double) =
-      if (d.isNaN || d.isInfinite) "null" else Jsons.num(d)
-    def expPair(pts: Seq[(Long, Double)]): (Double, Double) = {
-      val ok = pts.filter(_._2 > 0)
-      if (ok.size >= 2)
-        (ScaleCurves.exp(ok.head, ok.last),
-          ScaleCurves.exp(ok(ok.size - 2), ok.last))
-      else (Double.NaN, Double.NaN)
-    }
     val gateJson = results.map { case (g, ts) =>
-      val (full, tail) = expPair(ts)
       val walls = ts.map { case (m, t) => s""""${m}x":${Jsons.num(t, 3)}""" }
         .mkString("{", ",", "}")
-      s"""${Jsons.jq(g)}:{"wall_s":$walls,"exp_full":${numOrNull(full)},""" +
-        s""""exp_tail":${numOrNull(tail)}}"""
+      s"""${Jsons.jq(g)}:{"wall_s":$walls,${ScaleCurves.expFields(ts)}}"""
     }
     val driverJson = Seq(
       ("ngram_index_pairs", driverRows.map(r => (r._1, r._2.toDouble))),
       ("containment_prefix_candidates", driverRows.map(r => (r._1, r._3.toDouble)))
     ).map { case (name, pts) =>
-      val (full, tail) = expPair(pts)
       val counts = pts.map { case (m, v) => s""""${m}x":${v.toLong}""" }
         .mkString("{", ",", "}")
-      s"""${Jsons.jq(name)}:{"count":$counts,"exp_full":${numOrNull(full)},""" +
-        s""""exp_tail":${numOrNull(tail)}}"""
+      s"""${Jsons.jq(name)}:{"count":$counts,${ScaleCurves.expFields(pts)}}"""
     }
     val json = s"""{"metric":"scale_contain","vocab":${Jsons.jq(vocab)},""" +
       s""""multiples":[${ms.mkString(",")}],"base":${Jsons.jq(base)},""" +

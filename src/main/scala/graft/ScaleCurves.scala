@@ -33,36 +33,22 @@ object ScaleCurves {
     "triangle_count", "dedup_minhash_lsh",
     "dedup_ngram_jaccard", "dedup_containment")
 
-  /** One timed, fully-materialized run (noop sink) of a registered
-    * gate; −1 on failure. Plan cache cleared first. Shared with
-    * [[ScaleContain]] so both curve artifacts measure identically.
-    */
-  def runOnce(spark: SparkSession, gate: String, dir: String): Double = {
-    spark.catalog.clearCache()
-    val t0 = System.nanoTime()
-    try SparkEntry.queries(gate)(spark, dir)
-      .write.format("noop").mode("overwrite").save()
-    catch {
-      case e: Throwable =>
-        System.err.println(s"[scalecurves] $gate @ $dir failed: ${e.getMessage}")
-        return -1.0
-    }
-    (System.nanoTime() - t0) / 1e9
-  }
-
   /** The measurement discipline (docs in the class comment): per-gate
     * untimed warm-up on the smallest slice, then per multiple
-    * min-of-2 while under 30 s, single rep above.
+    * min-of-2 while under 30 s, single rep above. Each run is
+    * `Bench.runOnce` (noop sink, plan cache cleared first, −1 on
+    * failure), shared with [[ScaleContain]], so every curve artifact
+    * measures as Bench does.
     */
   def timeGates(spark: SparkSession, gates: Seq[String], ms: Seq[Long],
       dirs: Map[Long, String]): Seq[(String, Seq[(Long, Double)])] =
     gates.map { g =>
-      runOnce(spark, g, dirs(ms.head))
+      Bench.runOnce(spark, dirs(ms.head), g)
       val times = ms.map { m =>
-        val t1 = runOnce(spark, g, dirs(m))
+        val t1 = Bench.runOnce(spark, dirs(m), g)
         val t =
           if (t1 >= 0 && t1 < 30) {
-            val t2 = runOnce(spark, g, dirs(m))
+            val t2 = Bench.runOnce(spark, dirs(m), g)
             if (t2 >= 0) math.min(t1, t2) else t1
           } else t1
         println(s"[scalecurves] $g @ ${m}x: ${Jsons.num(t, 3)} s")
@@ -72,8 +58,21 @@ object ScaleCurves {
     }
 
   /** log-log growth exponent between two (multiple, value) points. */
-  def exp(p: (Long, Double), q: (Long, Double)): Double =
+  private def exp(p: (Long, Double), q: (Long, Double)): Double =
     math.log(q._2 / p._2) / math.log(q._1.toDouble / p._1)
+
+  /** The `"exp_full":…,"exp_tail":…` JSON fields of a curve: exponents
+    * over the positive points, first to last and over the last step;
+    * `null` where fewer than two points are positive.
+    */
+  def expFields(pts: Seq[(Long, Double)]): String = {
+    val ok = pts.filter(_._2 > 0)
+    val (full, tail) =
+      if (ok.size >= 2) (exp(ok.head, ok.last), exp(ok(ok.size - 2), ok.last))
+      else (Double.NaN, Double.NaN)
+    def numOrNull(d: Double) = if (d.isNaN || d.isInfinite) "null" else Jsons.num(d)
+    s""""exp_full":${numOrNull(full)},"exp_tail":${numOrNull(tail)}"""
+  }
 
   def main(args: Array[String]): Unit = {
     val base = if (args.length > 0) args(0) else "target/testdata"
@@ -114,15 +113,9 @@ object ScaleCurves {
     // JVM, not the plan
     val results = timeGates(spark, gates, ms, dirs)
     val rows = results.map { case (g, ts) =>
-      val ok = ts.filter(_._2 > 0)
-      val (full, tailE) =
-        if (ok.size >= 2) (exp(ok.head, ok.last), exp(ok(ok.size - 2), ok.last))
-        else (Double.NaN, Double.NaN)
       val tsJson = ts.map { case (m, t) => s""""${m}x":${Jsons.num(t, 3)}""" }
         .mkString("{", ",", "}")
-      def numOrNull(d: Double) = if (d.isNaN || d.isInfinite) "null" else Jsons.num(d)
-      s"""${Jsons.jq(g)}:{"wall_s":$tsJson,"exp_full":${numOrNull(full)},""" +
-        s""""exp_tail":${numOrNull(tailE)}}"""
+      s"""${Jsons.jq(g)}:{"wall_s":$tsJson,${expFields(ts)}}"""
     }
     val json = s"""{"metric":"scale_curves","multiples":[${ms.mkString(",")}],""" +
       s""""base":${Jsons.jq(base)},"session_conf":${Jsons.conf(sessionConf)},""" +

@@ -62,38 +62,34 @@ object BpeApply {
   private val B = '\u0001'
   private val E = '\u0002'
 
+  /** The [[Words]] split, each word merged, then the words re-joined. */
   def compute(s: String, pairs: Array[(String, String)]): String = {
-    val out = new java.lang.StringBuilder(s.length * 3)
-    var start = 0
+    val words = Words.split(s)
     var i = 0
-    var first = true
-    while (i <= s.length) {
-      if (i == s.length || s.charAt(i) == ' ') {
-        if (i > start) {
-          if (!first) out.append(' ')
-          first = false
-          // bracketize the word, then run the merge chain
-          val sb = new java.lang.StringBuilder((i - start) * 3)
-          var j = start
-          while (j < i) {
-            sb.append(B).append(s.charAt(j)).append(E)
-            j += 1
-          }
-          var word = sb.toString
-          var m = 0
-          while (m < pairs.length) {
-            // String.replace = left-to-right, non-overlapping, resume
-            // after the replacement — greedy BPE application
-            if (word.contains(pairs(m)._1)) word = word.replace(pairs(m)._1, pairs(m)._2)
-            m += 1
-          }
-          out.append(word)
-        }
-        start = i + 1
-      }
+    while (i < words.size) {
+      words.set(i, merge(words.get(i), pairs))
       i += 1
     }
-    out.toString
+    Words.join(words, 0, words.size, new java.lang.StringBuilder(s.length * 3))
+  }
+
+  /** Bracketize the word, then run the merge chain. */
+  private def merge(word: String, pairs: Array[(String, String)]): String = {
+    val sb = new java.lang.StringBuilder(word.length * 3)
+    var j = 0
+    while (j < word.length) {
+      sb.append(B).append(word.charAt(j)).append(E)
+      j += 1
+    }
+    var out = sb.toString
+    var m = 0
+    while (m < pairs.length) {
+      // String.replace = left-to-right, non-overlapping, resume after
+      // the replacement — greedy BPE application
+      if (out.contains(pairs(m)._1)) out = out.replace(pairs(m)._1, pairs(m)._2)
+      m += 1
+    }
+    out
   }
 
   /** Column API: bpe_apply(text) with a fixed merge table. */

@@ -44,15 +44,11 @@ case class ProfileHits(child: Expression, words: Seq[String]) extends UnaryExpre
 object ProfileHits {
 
   def compute(text: UTF8String, words: java.util.HashSet[String]): Int = {
-    val s = text.toString
+    val toks = Words.split(text.toString)
     var hits = 0
-    var start = 0
     var i = 0
-    while (i <= s.length) {
-      if (i == s.length || s.charAt(i) == ' ') {
-        if (i > start && words.contains(s.substring(start, i))) hits += 1
-        start = i + 1
-      }
+    while (i < toks.size) {
+      if (words.contains(toks.get(i))) hits += 1
       i += 1
     }
     hits

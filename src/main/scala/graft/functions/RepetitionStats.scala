@@ -48,34 +48,15 @@ case class RepetitionStats(child: Expression, n: Int) extends UnaryExpression {
 object RepetitionStats {
 
   def compute(text: UTF8String, n: Int): InternalRow = {
-    val s = text.toString
-    val toks = new java.util.ArrayList[String]()
-    var start = 0
-    var i = 0
-    while (i <= s.length) {
-      if (i == s.length || s.charAt(i) == ' ') {
-        if (i > start) toks.add(s.substring(start, i))
-        start = i + 1
-      }
-      i += 1
-    }
+    val toks = Words.split(text.toString)
     val m = toks.size
-    val distinctToks = new java.util.HashSet[String](m * 2)
-    var t = 0
-    while (t < m) { distinctToks.add(toks.get(t)); t += 1 }
+    val distinctToks = new java.util.HashSet[String](toks)
 
     val counts = new java.util.HashMap[String, Int]()
     val sb = new java.lang.StringBuilder
     var j = 0
     while (j + n <= m) {
-      sb.setLength(0)
-      var k = 0
-      while (k < n) {
-        if (k > 0) sb.append(' ')
-        sb.append(toks.get(j + k))
-        k += 1
-      }
-      counts.merge(sb.toString, 1, (a, b) => a + b)
+      counts.merge(Words.join(toks, j, j + n, sb), 1, (a, b) => a + b)
       j += 1
     }
     val nGrams = math.max(m - n + 1, 0)

@@ -56,18 +56,9 @@ object SpanCorrupt {
   def compute(docId: Long, text: UTF8String, startMod: Int,
       lenSpread: Int): InternalRow = {
     val s = text.toString
-    // whitespace tokens, empties dropped (the TextAnalysis.tokens split)
-    val ws = new scala.collection.mutable.ArrayBuffer[String]()
-    var start = 0
-    var i = 0
-    while (i <= s.length) {
-      if (i == s.length || s.charAt(i) == ' ') {
-        if (i > start) ws += s.substring(start, i)
-        start = i + 1
-      }
-      i += 1
-    }
-    val n = ws.length
+    // Words.split: the TextAnalysis.tokens contract
+    val ws = Words.split(s)
+    val n = ws.size
     if (n == 0)
       return InternalRow(0, 0, 0,
         UTF8String.fromString(""), UTF8String.fromString(""))
@@ -91,7 +82,7 @@ object SpanCorrupt {
     while (k < n) {
       if (!masked(k)) {
         if (input.length > 0) input.append(' ')
-        input.append(ws(k))
+        input.append(ws.get(k))
       } else {
         nMasked += 1
         val runStart = k == 0 || !masked(k - 1)
@@ -103,7 +94,7 @@ object SpanCorrupt {
           if (target.length > 0) target.append(' ')
           target.append(sent)
         }
-        target.append(' ').append(ws(k))
+        target.append(' ').append(ws.get(k))
       }
       k += 1
     }

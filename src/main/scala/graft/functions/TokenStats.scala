@@ -43,28 +43,19 @@ case class TokenStats(child: Expression) extends UnaryExpression {
 object TokenStats {
 
   def compute(text: UTF8String): InternalRow = {
-    val s = text.toString
-    val uniq = new java.util.HashSet[String]()
-    var n = 0
+    val toks = Words.split(text.toString)
+    val uniq = new java.util.HashSet[String](toks)
     var sumLen = 0
     var maxLen = 0
-    var start = 0
     var i = 0
-    while (i <= s.length) {
-      if (i == s.length || s.charAt(i) == ' ') {
-        if (i > start) {
-          val tok = s.substring(start, i)
-          n += 1
-          uniq.add(tok)
-          val len = tok.codePointCount(0, tok.length)
-          sumLen += len
-          if (len > maxLen) maxLen = len
-        }
-        start = i + 1
-      }
+    while (i < toks.size) {
+      val tok = toks.get(i)
+      val len = tok.codePointCount(0, tok.length)
+      sumLen += len
+      if (len > maxLen) maxLen = len
       i += 1
     }
-    InternalRow(n, uniq.size, sumLen, maxLen)
+    InternalRow(toks.size, uniq.size, sumLen, maxLen)
   }
 
   def apply(text: Column): Column =

@@ -48,19 +48,8 @@ object WinnowKeys {
   private val PosCap = 1L << 20
 
   def compute(text: UTF8String, k: Int, w: Int): ArrayData = {
-    // whitespace tokens, empties dropped — same split as
-    // TextAnalysis.tokens / WordChunks
-    val s = text.toString
-    val toks = new java.util.ArrayList[String]()
-    var start = 0
-    var i = 0
-    while (i <= s.length) {
-      if (i == s.length || s.charAt(i) == ' ') {
-        if (i > start) toks.add(s.substring(start, i))
-        start = i + 1
-      }
-      i += 1
-    }
+    // Words.split, the tokenizer every native text expression shares
+    val toks = Words.split(text.toString)
     val m = toks.size
     if (m < k) return new GenericArrayData(Array.empty[Any])
     val nGrams = m - k + 1
@@ -69,15 +58,8 @@ object WinnowKeys {
     val sb = new java.lang.StringBuilder
     var g = 0
     while (g < nGrams) {
-      sb.setLength(0)
-      var j = 0
-      while (j < k) {
-        if (j > 0) sb.append(' ')
-        sb.append(toks.get(g + j))
-        j += 1
-      }
       val h = PolyHash.hashBytes(
-        sb.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+        Words.join(toks, g, g + k, sb).getBytes(java.nio.charset.StandardCharsets.UTF_8))
       keys(g) = h * PosCap + (PosCap - 1 - g)
       g += 1
     }

@@ -41,17 +41,7 @@ case class WordChunks(child: Expression, w: Int) extends UnaryExpression {
 object WordChunks {
 
   def compute(text: UTF8String, w: Int): ArrayData = {
-    val toks = new java.util.ArrayList[String]()
-    val s = text.toString
-    var start = 0
-    var i = 0
-    while (i <= s.length) {
-      if (i == s.length || s.charAt(i) == ' ') {
-        if (i > start) toks.add(s.substring(start, i))
-        start = i + 1
-      }
-      i += 1
-    }
+    val toks = Words.split(text.toString)
     val m = toks.size
     if (m == 0) return new GenericArrayData(Array.empty[Any])
     val nChunks = (m + w - 1) / w
@@ -59,15 +49,7 @@ object WordChunks {
     val sb = new java.lang.StringBuilder
     var j = 0
     while (j < nChunks) {
-      sb.setLength(0)
-      var k = j * w
-      val end = math.min(k + w, m)
-      while (k < end) {
-        if (k > j * w) sb.append(' ')
-        sb.append(toks.get(k))
-        k += 1
-      }
-      out(j) = UTF8String.fromString(sb.toString)
+      out(j) = UTF8String.fromString(Words.join(toks, j * w, math.min(j * w + w, m), sb))
       j += 1
     }
     new GenericArrayData(out)

@@ -45,36 +45,16 @@ case class WordShingles(child: Expression, n: Int) extends UnaryExpression {
 
 object WordShingles {
 
-  /** Tokenize on single spaces (empties dropped, matching
-    * `filter(split(text, " "), _ =!= "")`), emit first-occurrence-
-    * distinct n-grams joined by one space.
-    */
+  /** First-occurrence-distinct n-grams of the [[Words]] tokens. */
   def compute(text: UTF8String, n: Int): ArrayData = {
-    val toks = new java.util.ArrayList[String]()
-    val s = text.toString
-    var start = 0
-    var i = 0
-    while (i <= s.length) {
-      if (i == s.length || s.charAt(i) == ' ') {
-        if (i > start) toks.add(s.substring(start, i))
-        start = i + 1
-      }
-      i += 1
-    }
+    val toks = Words.split(text.toString)
     val m = toks.size
     if (m < n) return new GenericArrayData(Array.empty[Any])
     val seen = new java.util.LinkedHashSet[String]((m - n + 1) * 2)
     val sb = new java.lang.StringBuilder
     var j = 0
     while (j + n <= m) {
-      sb.setLength(0)
-      var k = 0
-      while (k < n) {
-        if (k > 0) sb.append(' ')
-        sb.append(toks.get(j + k))
-        k += 1
-      }
-      seen.add(sb.toString)
+      seen.add(Words.join(toks, j, j + n, sb))
       j += 1
     }
     val out = new Array[Any](seen.size)

@@ -42,36 +42,18 @@ case class WordSpans(child: Expression, n: Int) extends UnaryExpression {
 
 object WordSpans {
 
-  /** Tokenize on single spaces (empties dropped, matching
-    * `filter(split(text, " "), _ =!= "")`), emit every overlapping
-    * n-gram in positional order.
+  /** Every overlapping n-gram of the [[Words]] tokens, in positional
+    * order.
     */
   def compute(text: UTF8String, n: Int): ArrayData = {
-    val toks = new java.util.ArrayList[String]()
-    val s = text.toString
-    var start = 0
-    var i = 0
-    while (i <= s.length) {
-      if (i == s.length || s.charAt(i) == ' ') {
-        if (i > start) toks.add(s.substring(start, i))
-        start = i + 1
-      }
-      i += 1
-    }
+    val toks = Words.split(text.toString)
     val m = toks.size
     if (m < n) return new GenericArrayData(Array.empty[Any])
     val out = new Array[Any](m - n + 1)
     val sb = new java.lang.StringBuilder
     var j = 0
     while (j + n <= m) {
-      sb.setLength(0)
-      var k = 0
-      while (k < n) {
-        if (k > 0) sb.append(' ')
-        sb.append(toks.get(j + k))
-        k += 1
-      }
-      out(j) = UTF8String.fromString(sb.toString)
+      out(j) = UTF8String.fromString(Words.join(toks, j, j + n, sb))
       j += 1
     }
     new GenericArrayData(out)

@@ -175,7 +175,8 @@ object Dedup {
     * cap (4096) is far above any bucket the gate data produces —
     * results there are exact — but corpora with huge near-identical
     * cliques that survive the exact-dup collapse trade those pairs for
-    * boundedness; tune the cap via the parameter.
+    * boundedness; tune the cap via the parameter. [[lshBucketStats]]
+    * on the same signatures counts the buckets that took the star path.
     *
     * The exact-dup collapse (md5 group → one representative) is what
     * production LLM dedup does first: a corpus with heavy byte-exact
@@ -191,8 +192,7 @@ object Dedup {
     */
   def minhashNearDups(df: DataFrame, textCol: String, idCol: String,
       shingleN: Int = 3, threshold: Double = 0.5,
-      maxBucketSize: Int = 4096,
-      logBucketDiagnostics: Boolean = false): DataFrame = {
+      maxBucketSize: Int = 4096): DataFrame = {
     // exact-dup collapse: one representative (min id) per distinct
     // text. Two tuning dead-ends measured here and rejected:
     // materializing repDocs/sets via localCheckpoint (6.5 s → 18 s,
@@ -211,18 +211,6 @@ object Dedup {
 
     val sets = shingleSets(repDocs, "txt", "doc_id", shingleN)
     val sigs = minhashSignatures(sets, 64)
-    if (logBucketDiagnostics) {
-      // opt-in extra pass (signatures recomputed — deliberately no
-      // cache here, see the dead-ends note above): surfaces whether
-      // any bucket took the star path this run, i.e. whether the
-      // output can differ from exact all-pairs at all
-      val (over, largest) = lshBucketStats(sigs, 32, 2, maxBucketSize)
-      if (over > 0)
-        org.slf4j.LoggerFactory.getLogger(getClass).warn(
-          s"minhashNearDups: $over LSH bucket(s) over maxBucketSize=" +
-            s"$maxBucketSize (largest: $largest) took the star path — " +
-            "non-center pairs in those buckets rely on other bands")
-    }
     val cands = lshCandidates(sigs, bands = 32, rowsPerBand = 2, maxBucketSize)
     val repPairs = verifyJaccard(cands, sets)
       .filter(col("jaccard") >= threshold)

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import graft.functions.PolyHash
 import graft.llm.{Dedup, Multimodal, Similarity, TextAnalysis}
@@ -222,21 +223,87 @@ class LlmSpec extends SparkSpec {
     assert(overTiny > 0L)
   }
 
-  test("WordChunks native expression matches the HOF slice chain") {
+  test("word kernel expressions match their HOF chains on tokenizer edge cases") {
     import spark.implicits._
-    val df = Seq("a b c d e f g", "one two", "", "  x  ", "a b c d e f g h i j k")
-      .toDF("text")
-    val w = 3
+    // one row per split edge case: empty text, runs of spaces, leading
+    // and trailing spaces, a tab or newline inside a token (a space is
+    // the only separator), a non-BMP code point, repeated tokens
+    val texts = Seq("a b c d e f g", "one two", "", "  x  ", "a b c d e f g h i j k",
+      "a  b", " lead", "trail ", "  both  ends  ", "tab\tin tok", "new\nline tok",
+      "😀 a", "a 😀😀 b 😀😀", "the the the the", "a b a b a b c")
+    val df = texts.toDF("text")
     val toks = TextAnalysis.tokens(col("text"))
-    val nChunks = ceil(size(toks).cast("double") / w).cast("int")
-    val hof = when(size(toks) === 0, array().cast("array<string>"))
-      .otherwise(transform(sequence(lit(0), nChunks - 1),
-        i => array_join(slice(toks, i * w + 1, lit(w)), " ")))
-    val rows = df.select(graft.functions.WordChunks(col("text"), w).as("native"),
-      hof.as("hof")).collect()
-    rows.foreach(r => assert(r.getSeq[String](0) == r.getSeq[String](1)))
-    assert(rows(0).getSeq[String](0) == Seq("a b c", "d e f", "g"))
-    assert(rows(2).getSeq[String](0).isEmpty)
+    val noStrings = array().cast("array<string>")
+    def grams(n: Int): Column = when(size(toks) < n, noStrings)
+      .otherwise(transform(sequence(lit(0), size(toks) - n),
+        i => array_join(slice(toks, i + 1, lit(n)), " ")))
+    def sameRows(native: Column, hof: Column): Unit =
+      df.select(col("text"), native.as("native"), hof.as("hof")).collect().foreach { r =>
+        assert(r.get(1) == r.get(2), s"native != HOF on ${r.getString(0).toSeq}")
+      }
+
+    val lens = transform(toks, t => length(t))
+    sameRows(graft.functions.TokenStats(col("text")),
+      struct(size(toks).as("n_tokens"), size(array_distinct(toks)).as("n_uniq"),
+        aggregate(lens, lit(0), (a, l) => a + l).as("sum_len"),
+        coalesce(array_max(lens), lit(0)).as("max_len")))
+    val words = Seq("a", "the", "x", "😀😀", "tab\tin")
+    sameRows(graft.functions.ProfileHits(col("text"), words),
+      size(filter(toks, t => t.isin(words: _*))))
+    for (n <- Seq(1, 2, 3)) {
+      sameRows(graft.functions.WordSpans(col("text"), n), grams(n))
+      sameRows(graft.functions.WordShingles(col("text"), n), array_distinct(grams(n)))
+      val g = grams(n)
+      def occ(x: Column): Column = size(filter(g, y => y === x))
+      sameRows(graft.functions.RepetitionStats(col("text"), n),
+        struct(greatest(size(toks) - n + 1, lit(0)).as("n_grams"),
+          coalesce(array_max(transform(array_distinct(g), x => occ(x))), lit(0)).as("top_cnt"),
+          aggregate(array_distinct(g), lit(0),
+            (a, x) => a + when(occ(x) >= 2, occ(x)).otherwise(0)).as("dup_occ"),
+          size(toks).as("n_tokens"), size(array_distinct(toks)).as("n_distinct_tokens")))
+    }
+    for (w <- Seq(1, 3)) {
+      val nChunks = ceil(size(toks).cast("double") / w).cast("int")
+      sameRows(graft.functions.WordChunks(col("text"), w),
+        when(size(toks) === 0, noStrings).otherwise(transform(sequence(lit(0), nChunks - 1),
+          i => array_join(slice(toks, i * w + 1, lit(w)), " "))))
+    }
+    assert(df.select(graft.functions.WordChunks(col("text"), 3)).head().getSeq[String](0) ==
+      Seq("a b c", "d e f", "g"))
+
+    // WinnowKeys against a plain-Scala winnowing: packed keys of every
+    // k-gram, each window's minimum, distinct in first-selection order
+    def winnowRef(s: String, k: Int, w: Int): Seq[Long] = {
+      val ts = s.split(" ").filter(_.nonEmpty).toSeq
+      if (ts.length < k) Seq.empty
+      else {
+        val cap = 1L << 20
+        val keys = ts.sliding(k).zipWithIndex.map { case (gram, i) =>
+          PolyHash.hashBytes(gram.mkString(" ").getBytes("UTF-8")) * cap + (cap - 1 - i)
+        }.toIndexedSeq
+        (0 to math.max(keys.length - w, 0)).map(s => keys.slice(s, s + w).min).distinct
+      }
+    }
+    for ((k, w) <- Seq((1, 1), (2, 3), (3, 10))) {
+      val got = df.select(graft.functions.WinnowKeys(col("text"), k, w)).collect()
+        .map(_.getSeq[Long](0))
+      texts.zip(got).foreach { case (s, g) =>
+        assert(g == winnowRef(s, k, w), s"winnow_keys($k, $w) on ${s.toSeq}")
+      }
+    }
+
+    // BpeApply: every token bracketized per UTF-16 char, the merge
+    // chain run as left-to-right String.replace, tokens re-joined by
+    // one space. A non-BMP char's surrogates are bracketized apart, so
+    // the UTF-8 result carries '?' for each (the round trip below).
+    val merges = Seq(("a", "b"), ("t", "h"), ("th", "e"))
+    def bpeRef(s: String): String = new String(s.split(" ").filter(_.nonEmpty).map { t =>
+      merges.foldLeft(t.map(c => s"\u0001$c\u0002").mkString) { case (acc, (l, r)) =>
+        acc.replace(s"\u0001$l\u0002\u0001$r\u0002", s"\u0001$l$r\u0002")
+      }
+    }.mkString(" ").getBytes("UTF-8"), "UTF-8")
+    val bpe = df.select(graft.functions.BpeApply(col("text"), merges)).as[String].collect()
+    texts.zip(bpe).foreach { case (s, b) => assert(b == bpeRef(s), s"bpe_apply on ${s.toSeq}") }
   }
 
   test("incrementalDedup drops served + in-batch dups, keeps min id") {

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.operators.SkewJoin
 
@@ -22,6 +23,30 @@ class SessionSpec extends SparkSpec {
     val ext = new GraftExtensions()
     val holder = new org.apache.spark.sql.SparkSessionExtensions
     ext.apply(holder) // must not throw
+  }
+
+  test("a session carrying GraftExtensions resolves every engine SQL function") {
+    // a fresh session on the shared context, built with the extension
+    // alone: nothing registers functions on it after the build
+    spark
+    val (active, default) = (SparkSession.getActiveSession, SparkSession.getDefaultSession)
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    val ext = try SparkSession.builder().withExtensions(new GraftExtensions).getOrCreate()
+    finally {
+      active.foreach(SparkSession.setActiveSession)
+      default.foreach(SparkSession.setDefaultSession)
+    }
+    assert(ext ne spark)
+    val names = Seq("poly_hash", "vector_dot", "word_shingles", "winnow_keys")
+    names.foreach(n => assert(ext.catalog.functionExists(n), s"$n not resolved"))
+    val r = ext.sql("SELECT poly_hash('ab'), " +
+      "vector_dot(array(CAST(1.0 AS FLOAT)), array(CAST(3.0 AS FLOAT))), " +
+      "word_shingles('a b a b', 2), size(winnow_keys('a b c d', 2, 2))").head()
+    assert(r.getLong(0) == 97L * 31 + 98)
+    assert(r.getDouble(1) == 3.0)
+    assert(r.getSeq[String](2) == Seq("a b", "b a"))
+    assert(r.getInt(3) > 0)
   }
 
   test("runtime bloom filter prunes the fact side of a selective dim join") {
