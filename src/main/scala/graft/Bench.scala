@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Benchmark main (driver contract): runs every declared query against
   * SPARK_GRAFT_SF_DIR, fully materializing each result through the
@@ -80,11 +80,17 @@ object Bench {
     spark
   }
 
-  /** Bench's run step, shared with `Profile` and the scale curves
-    * (`ScaleCurves.timeGates`): one query through the noop sink, in
-    * seconds, or -1.0 if it failed.
+  /** Bench's run step, shared with `Profile`: one query through the
+    * noop sink, in seconds, or -1.0 if it failed.
     */
-  private[graft] def runOnce(spark: SparkSession, sfDir: String, name: String): Double = {
+  private[graft] def runOnce(spark: SparkSession, sfDir: String, name: String): Double =
+    runFrame(spark, name)(SparkEntry.queries(name)(spark, sfDir))
+
+  /** The run step for any frame, shared with `Curves`: builds `frame`
+    * and writes it through the noop sink, in seconds, or -1.0 if it
+    * failed (reported under `name`).
+    */
+  private[graft] def runFrame(spark: SparkSession, name: String)(frame: => DataFrame): Double = {
     // measurement isolation: clear any cached plans a prior query
     // leaked so no query silently reuses another's work. Deliberately
     // NO System.gc() here: a forced full GC triggers ContextCleaner
@@ -93,8 +99,7 @@ object Bench {
     // dedup pipeline with gc, stable 7.7 s without).
     spark.catalog.clearCache()
     val t0 = System.nanoTime()
-    try SparkEntry.queries(name)(spark, sfDir)
-      .write.format("noop").mode("overwrite").save()
+    try frame.write.format("noop").mode("overwrite").save()
     catch {
       case e: Throwable =>
         System.err.println(s"[bench] $name failed: ${e.getMessage}")

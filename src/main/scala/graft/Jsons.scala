@@ -1,10 +1,8 @@
 package graft
 
 /** Shared hand-rolled JSON rendering for the artifact writers
-  * (Verify, ClusterVerify, FaultVerify, ScaleStream).
-  * One copy so an escaping or locale fix cannot silently diverge
-  * between artifacts (the r11 advice round found the locale bug had
-  * to be patched in two places; by r12 there were four copies).
+  * (Verify, ClusterVerify, FaultVerify, Curves and the rest). One copy,
+  * so an escaping or locale fix reaches every artifact at once.
   */
 private[graft] object Jsons {
   /** JSON string escape: backslash, quote, and ALL control chars
@@ -28,10 +26,10 @@ private[graft] object Jsons {
   def num(d: Double, decimals: Int = 2): String =
     String.format(java.util.Locale.ROOT, s"%.${decimals}f", Double.box(d))
 
-  /** Sorted, fully-escaped rendering of a session_conf map — ONE copy
-    * for every artifact writer (Bench, Verify, ScaleCurves), because a
-    * conf value containing a quote or backslash must not be able to
-    * invalidate one artifact while the others escape it (ADVICE r14).
+  /** Sorted, fully-escaped rendering of a session_conf map — one copy
+    * for every artifact writer (Bench, Verify, Curves), because a conf
+    * value containing a quote or backslash must not be able to
+    * invalidate one artifact while the others escape it.
     */
   def conf(m: Map[String, String]): String =
     m.toSeq.sorted.map { case (k, v) => s"${jq(k)}:${jq(v)}" }

@@ -3,16 +3,17 @@ package graft
 import java.nio.file.{Files, Path, Paths}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions._
 
 import graft.streaming.StreamStages
 
 /** The state-store swap criterion, demonstrated rather than argued.
   *
-  * ScaleStream (r11) measured the within-watermark dedup gate's state
-  * growth across 1×→50× slices; this main makes the swap rule ("move
-  * to RocksDB once per-partition state approaches executor memory") a
-  * measured life-or-death fact across a real process boundary: the
-  * SAME gate shape (one shared definition — ScaleStream.dedupShape),
+  * The stream_dedup scale curve (`graft.Curves`) measures the
+  * within-watermark dedup gate's state growth across slices; this main
+  * makes the swap rule ("move to RocksDB once per-partition state
+  * approaches executor memory") a measured life-or-death fact across a
+  * real process boundary: the stream_dedup gate's shape ([[dedupShape]]),
   * on a ScaleGen **150×** slice (30 M doubled events, 15 M distinct
   * keys — 50×/5 M keys still FITS a 1 GiB heap, see the calibration
   * note in BASELINE.md), against a `local-cluster[1,2,1024]` executor
@@ -38,7 +39,26 @@ import graft.streaming.StreamStages
   */
 object StatePressure {
 
-  /** The shared gate shape, parquet-sinked (the memory sink would
+  /** The stream_dedup gate shape: the events frame written DOUBLED to
+    * `inDir` (idempotent — skipped when the dir exists so the phases
+    * reuse one input), then the within-watermark dedup stream over it.
+    */
+  private def dedupShape(spark: SparkSession, events: DataFrame,
+      inDir: String): DataFrame = {
+    val ev = events.select(col("event_id"), col("event_type"),
+      timestamp_micros(expr("ts div 1000")).as("ets"))
+    if (!Files.exists(Paths.get(inDir))) {
+      ev.coalesce(4).write.mode("overwrite").parquet(inDir)
+      ev.coalesce(4).write.mode("append").parquet(inDir)
+    }
+    val schema = spark.read.parquet(inDir).schema
+    val src = StreamStages.fileSource(spark, "parquet", inDir, schema.json)
+    StreamStages.dedupWithinWatermark(src, "ets", "1 hour", Seq("event_id"))
+      .select(col("event_id"), col("event_type"),
+        unix_micros(col("ets")).as("ts_us"))
+  }
+
+  /** The gate shape, parquet-sinked (the memory sink would
     * buffer |keys| rows in the driver; the parquet sink keeps the
     * pressure where the proof needs it — executor state). The state
     * provider rides withGateConf's `extra` varargs, which are applied
@@ -49,7 +69,7 @@ object StatePressure {
   private def runDedup(spark: SparkSession, sliceDir: String,
       base: Path, provider: Option[String]): DataFrame = {
     val events = Tables.load(spark, sliceDir, "events")
-    val deduped = ScaleStream.dedupShape(spark, events,
+    val deduped = dedupShape(spark, events,
       base.resolve("in").toString)
     val out = base.resolve(s"out-${System.nanoTime()}").toString
     val cp = base.resolve(s"cp-${System.nanoTime()}").toString

@@ -69,8 +69,8 @@ object PySparkPrograms {
       |""".stripMargin
 
   /** The same program with the WORK timed — from just before the lazy
-    * read (i.e. after SparkContext/JVM boot) to after the write — so a
-    * scale harness (graft.ScaleArrow) can split the data-dependent
+    * read (i.e. after SparkContext/JVM boot) to after the write — so
+    * the scale curves (graft.Curves) can split the data-dependent
     * Arrow/decode cost from the constant spark-submit JVM boot. Built
     * by string surgery on the canonical source above so the two can
     * never drift; stdout carries `ARROW_WORK_SECONDS=<t>`.

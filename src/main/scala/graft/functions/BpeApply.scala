@@ -9,7 +9,7 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** Greedy BPE merge application over a whitespace-tokenized text with
   * a fixed, trained merge table — the encode-side hot path
-  * (TextAnalysis.bpeEncode). Per word: bracketize every character as
+  * (TextAnalysis.bpeEncode). Per word: bracketize every code point as
   * `B c E` (B=, E=), then apply each merge `(l, r)` in
   * training order as the plain left-to-right non-overlapping
   * replacement `BlE BrE → BlrE` (java.lang.String.replace semantics —
@@ -45,9 +45,7 @@ case class BpeApply(child: Expression, merges: Seq[(String, String)])
     // has no generics, and the parameterized cast made the whole
     // projection fail codegen ("')' expected instead of '['") and run
     // INTERPRETED — the exact HOF-interpretation trap this expression
-    // exists to close (found by ScaleCurves r13: this was also the
-    // "sporadic benign janino error" r7 noted near the streaming
-    // gates — deterministic here, not sporadic).
+    // exists to close (CodegenSpec compiles it without fallback).
     val pairsRef = ctx.addReferenceObj("bpePairs", pairs, "scala.Tuple2[]")
     nullSafeCodeGen(ctx, ev, c =>
       s"${ev.value} = org.apache.spark.unsafe.types.UTF8String.fromString(" +
@@ -73,13 +71,17 @@ object BpeApply {
     Words.join(words, 0, words.size, new java.lang.StringBuilder(s.length * 3))
   }
 
-  /** Bracketize the word, then run the merge chain. */
+  /** Bracketize the word per code point, as `bpeTrain`'s `(.)` regex
+    * does (a non-BMP character is one symbol, not two lone surrogates),
+    * then run the merge chain.
+    */
   private def merge(word: String, pairs: Array[(String, String)]): String = {
     val sb = new java.lang.StringBuilder(word.length * 3)
     var j = 0
     while (j < word.length) {
-      sb.append(B).append(word.charAt(j)).append(E)
-      j += 1
+      val c = word.codePointAt(j)
+      sb.append(B).appendCodePoint(c).append(E)
+      j += Character.charCount(c)
     }
     var out = sb.toString
     var m = 0

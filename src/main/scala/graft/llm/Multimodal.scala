@@ -563,7 +563,7 @@ object Multimodal {
   }
 
   /** The `pyspark_pandas_decode` gate's exact input shape — one copy
-    * shared with graft.ScaleArrow so the profiled plan can never
+    * shared with graft.Curves so the profiled plan can never
     * drift from the gate's plan (same discipline as
     * PySparkPrograms.pandasPpmDecodeTimed for the python source).
     */

@@ -473,9 +473,9 @@ object Similarity {
     // stage downstream and get re-evaluated per JOIN-OUTPUT row —
     // measured at 10× sf0.1-equivalent (N=20k, 2.4M candidate rows):
     // 99 s for the scan stage vs 3.0 s with codes materialized
-    // (ScaleAnn ivfpq_stages bisect, r10). The cut is N rows × nSub
-    // small ints — the compressed table IS the thing PQ exists to
-    // materialize.
+    // (docs/HISTORY.md, "Embedding/ANN family extension"). The cut is
+    // N rows × nSub small ints — the compressed table IS the thing PQ
+    // exists to materialize.
     val codes = normed.select(
       col("vec_id").as("n_vec_id") +: col("label").as("cell") +: codeCols: _*)
       .localCheckpoint()

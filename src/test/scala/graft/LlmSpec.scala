@@ -292,16 +292,16 @@ class LlmSpec extends SparkSpec {
       }
     }
 
-    // BpeApply: every token bracketized per UTF-16 char, the merge
-    // chain run as left-to-right String.replace, tokens re-joined by
-    // one space. A non-BMP char's surrogates are bracketized apart, so
-    // the UTF-8 result carries '?' for each (the round trip below).
+    // BpeApply: every token bracketized per code point (a non-BMP char
+    // is one symbol, as in bpeTrain), the merge chain run as
+    // left-to-right String.replace, tokens re-joined by one space.
     val merges = Seq(("a", "b"), ("t", "h"), ("th", "e"))
-    def bpeRef(s: String): String = new String(s.split(" ").filter(_.nonEmpty).map { t =>
-      merges.foldLeft(t.map(c => s"\u0001$c\u0002").mkString) { case (acc, (l, r)) =>
+    def bpeRef(s: String): String = s.split(" ").filter(_.nonEmpty).map { t =>
+      val symbols = t.codePoints.toArray.map(c => new String(Character.toChars(c)))
+      merges.foldLeft(symbols.map(c => s"\u0001$c\u0002").mkString) { case (acc, (l, r)) =>
         acc.replace(s"\u0001$l\u0002\u0001$r\u0002", s"\u0001$l$r\u0002")
       }
-    }.mkString(" ").getBytes("UTF-8"), "UTF-8")
+    }.mkString(" ")
     val bpe = df.select(graft.functions.BpeApply(col("text"), merges)).as[String].collect()
     texts.zip(bpe).foreach { case (s, b) => assert(b == bpeRef(s), s"bpe_apply on ${s.toSeq}") }
   }
@@ -1049,6 +1049,20 @@ class LlmSpec extends SparkSpec {
     val got0 = TextAnalysis.bpeEncode(docs, "text", "doc_id", merges = 0)
       .collect().map(r => r.getLong(0) -> r.getInt(2)).toMap
     assert(got0 == Map(1L -> 11, 2L -> 9)) // lowlowlower=11, lowlowest=9 chars
+  }
+
+  test("bpe_apply applies the merges bpeTrain learns on non-BMP text (one symbol per code point)") {
+    import spark.implicits._
+    val docs = Seq((1L, "😀😀 😀😀 ab")).toDF("doc_id", "text")
+    val merges = TextAnalysis.bpeTrain(docs, "text", merges = 1).collect()
+      .map(r => (r.getString(1), r.getString(2))).toSeq
+    assert(merges == Seq(("😀", "😀")))
+    val applied = docs.select(graft.functions.BpeApply(col("text"), merges)).as[String].head()
+    assert(applied == "\u0001😀😀\u0002 \u0001😀😀\u0002 \u0001a\u0002\u0001b\u0002",
+      applied.toSeq)
+    val tokens = TextAnalysis.bpeEncode(docs, "text", "doc_id", merges = 1)
+      .select("n_tokens").as[Int].head()
+    assert(tokens == 4) // 😀😀, 😀😀, a, b
   }
 
   test("bpeTrain stops early when no pairs remain") {

@@ -1,11 +1,13 @@
 #!/usr/bin/env python3
-"""Merge a partial ScaleCurves run (e.g. the r16 30x extension for the
-recommended scale paths) into the committed SCALE_CURVES.json: gate rows
-present in the partial file replace the committed rows wholesale (their
-wall_s carries the new multiples), everything else is preserved, and the
-top-level `multiples` becomes the union. Per-gate coverage stays
-self-describing via each row's wall_s keys — gates measured only to 10x
-keep only those cells.
+"""Merge a partial `graft.Curves` run (e.g. one more multiple for a few
+gates) into a committed `scale_curves` artifact such as SCALE_CURVES.json:
+name rows present in the partial file replace the committed rows wholesale
+(their per-multiple maps carry the new multiples), everything else is
+preserved, and the top-level `multiples` becomes the union. Per-name
+coverage stays self-describing via each row's map keys — names measured
+only to 10x keep only those cells. Both runs must share the slice base,
+the documents regime (`vocab`, default dense), the state-store provider
+(`state_provider`, default hdfs) and the session conf overrides.
 
 Usage: merge_curves.py <committed.json> <partial.json>
 """
@@ -25,6 +27,9 @@ def main() -> None:
         f'{committed["base"]} vs {partial["base"]}')
     assert committed.get("session_conf") == partial.get("session_conf"), (
         "refusing to merge runs under different session conf overrides")
+    for key, default in (("vocab", "dense"), ("state_provider", "hdfs")):
+        assert committed.get(key, default) == partial.get(key, default), (
+            f"refusing to merge runs with different {key}")
     committed["gates"].update(partial["gates"])
     committed["multiples"] = sorted(
         set(committed["multiples"]) | set(partial["multiples"]))
